@@ -137,14 +137,13 @@ def zipf_tail_token(doc_id: str | Column = "doc_id") -> Column:
     deepest populated levels have df near any fixed top_k at EVERY
     corpus size (the synthetic sf tables' real vocabulary has a df
     floor of ~3% of the corpus, so without this no natural rare term
-    exists at scale; r9 verdict item 6). probe_bench's BM25
-    'selective' row appends this token to each document at fold
-    time, making the rarest df>=top_k term a generator-native one —
-    the engaged two-sided pruned read then demonstrates without a
-    specially-folded marker batch. tools/scaleup.py materializes the
-    same derivation as a ``zipf_token`` column of the replicated
-    documents table (identical values: the formula is a pure
-    function of doc_id)."""
+    exists at scale; r9 verdict item 6). A BM25 probe that appends
+    this token to each document at fold time makes the rarest
+    df>=top_k term a generator-native one — the engaged two-sided
+    pruned read then demonstrates without a specially-folded marker
+    batch. The formula is a pure function of doc_id, so a replicated
+    documents table can materialize it as a column with identical
+    values."""
     col = F.col(doc_id) if isinstance(doc_id, str) else doc_id
     u = F.pmod(F.xxhash64(col), F.lit(1 << 20)).cast("double")
     j = F.floor(F.log2(F.lit(float(1 << 20)) / (u + F.lit(1.0))))

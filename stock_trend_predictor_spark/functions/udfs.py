@@ -12,7 +12,7 @@ as the template for logic that genuinely cannot be vectorized
 Where each tier is used in anger:
 - scalar pandas_udf:      ml/vectorized.py (BLAS cosine kernels)
 - grouped-agg pandas_udf: here (weighted_avg_udaf)
-- applyInPandas:          ml/pergroup.py (per-key model solve)
+- applyInPandas:          ml/blobs.py (per-key opaque estimator fit)
 - applyInPandasWithState: streaming/windows.py (high-watermark state)
 - mapInPandas:            operators/multimodal.py (decode kernels)
 - mapInArrow:             operators/multimodal.py (byte-level CRC —

@@ -2,13 +2,13 @@
 ml/pergroup.py (SURVEY §7 phase 4 hard part, demonstrated beyond the
 closed-form model).
 
-The closed-form OLS harness proves the applyInPandas round trip with
-oracle-exact coefficients; this module proves the same harness carries
-an ARBITRARY Python estimator: ``groupBy(key).applyInPandas`` fits one
-estimator per key, pickles it into a ``binary`` column of a models
-DataFrame, and scoring broadcast-joins that table and unpickles inside
-an Arrow-batched pandas UDF (once per distinct blob per batch, never
-per row). No driver-side dict anywhere — the models table IS the model
+The closed-form OLS and ridge models need no Python stage: their
+sufficient statistics solve as Catalyst expressions. This module is
+the harness for an ARBITRARY Python estimator with no such form:
+``groupBy(key).applyInPandas`` fits one estimator per key, pickles it
+into a ``binary`` column of a models DataFrame, and scoring
+broadcast-joins that table and unpickles inside an Arrow-batched
+pandas UDF (once per distinct blob per batch, never per row). No driver-side dict anywhere — the models table IS the model
 registry, exactly like the reference's per-symbol loop output
 (ml_model/predict_from_vm4.py:29-39) but set-oriented and parallel.
 

@@ -3,18 +3,20 @@ reference's sequential per-symbol loop (ml_model/predict_from_vm4.py:29-39
 trains one RandomForest per symbol in a driver for-loop; :47-65 scores
 one document at a time).
 
-Here: ``groupBy(symbol).applyInPandas(train)`` fits every key's model
-in parallel (one task per key group), the fitted models land in a tiny
-models DataFrame, and scoring is a broadcast join + native expressions
-— set-oriented end to end.
+Here one native ``groupBy(symbol)`` aggregation builds every key's
+sufficient statistics (n, Σx, Σy, Σxy, Σxx) in a single pass, the
+closed-form solve runs as Catalyst expressions over that one-row-per-
+key table, the fitted models land in a tiny models DataFrame, and
+scoring is a broadcast join + native expressions — set-oriented end
+to end, with no Python stage anywhere on the path.
 
-The model intentionally has a closed form (OLS of close on open):
-with sums accumulated in quantized Decimal (mirroring the engine's
+The models intentionally have a closed form (OLS, or ridge, of close
+on open): with sums accumulated in quantized Decimal (the engine's
 decimal(27,6) aggregation), the fitted coefficients are bit-exact
 reproducible — so even the *training* step has a DuckDB oracle
-(plans/ml_queries.py). The same applyInPandas harness fits sklearn-
-style estimators 1:1 when exactness isn't required (see ml/pipeline.py
-for the MLlib pipeline variant).
+(plans/ml_queries.py). Estimators without a sufficient-statistic form
+plug into the applyInPandas harness in ml/blobs.py instead (and
+ml/pipeline.py holds the MLlib pipeline variant).
 
 Scale note (SURVEY §7 phase 4 hard part): thousands of per-key models
 stay in a DataFrame keyed by symbol; scoring broadcasts that table —
@@ -23,136 +25,61 @@ never a driver-side dict.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-MODEL_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("n_rows", LongType()),
-        StructField("slope", DoubleType()),
-        StructField("intercept", DoubleType()),
-    ]
-)
 
-def train_linreg_per_key(
-    ticks: DataFrame,
-    key: str = "symbol",
-    x: str = "open",
-    y: str = "close",
-) -> DataFrame:
-    """Fit y = intercept + slope*x per key.
+def _fit(ticks: DataFrame, slope: Callable[..., Column]) -> DataFrame:
+    """Fit close = intercept + slope*open per symbol.
 
-    Two stages, deliberately split for scale:
-
-    1. Sufficient statistics (n, Σx, Σy, Σxy, Σxx) as a *native*
-       decimal groupBy aggregation — JVM-side, map-side combinable,
-       order-independent (the decimal trick from functions/exact.py).
-       At 100 TB this is the only pass over the raw ticks, and it
-       shuffles 5 numbers per key, not rows.
-    2. The per-group closed-form solve via ``applyInPandas`` over the
-       tiny aggregate (one row per key) — the Arrow boundary where a
-       generic sklearn-style fit would plug in when a model has no
-       sufficient-statistic form (then stage 1 collapses away and the
-       raw group feeds the kernel directly, same harness).
-
-    An earlier version quantized every row in Python Decimal inside
-    the Arrow kernel — correct but ~10× slower at 100k rows and
-    CPU-bound in Python; moving the sums JVM-side keeps bit-exactness
-    (same per-value DECIMAL(27,6) cast) at scan speed.
+    The sufficient statistics are a native decimal groupBy aggregation:
+    JVM-side, map-side combinable and order-independent (the decimal
+    trick from functions/exact.py). It is the only pass over the raw
+    ticks and shuffles 5 numbers per key, not rows. ``slope(n, sx, sy,
+    sxy, sxx)`` builds the slope column from the double-cast sums; the
+    intercept is (Σy - slope*Σx)/n for every model.
     """
     from stock_trend_predictor_spark.functions.exact import DECIMAL_T
 
-    cx = F.col(x)
-    cy = F.col(y)
-    stats = (
-        ticks.where(cx.isNotNull() & cy.isNotNull())
-        .groupBy(key)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(cx.cast(DECIMAL_T)).cast("double").alias("sx"),
-            F.sum(cy.cast(DECIMAL_T)).cast("double").alias("sy"),
-            F.sum((cx * cy).cast(DECIMAL_T)).cast("double").alias("sxy"),
-            F.sum((cx * cx).cast(DECIMAL_T)).cast("double").alias("sxx"),
-        )
-    )
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = float(pdf["n"].iloc[0])
-        sx, sy = float(pdf["sx"].iloc[0]), float(pdf["sy"].iloc[0])
-        sxy, sxx = float(pdf["sxy"].iloc[0]), float(pdf["sxx"].iloc[0])
-        denom = n * sxx - sx * sx
-        slope = (n * sxy - sx * sy) / denom if denom != 0 else 0.0
-        intercept = (sy - slope * sx) / n if n > 0 else 0.0
-        return pd.DataFrame(
-            {
-                "symbol": [pdf[key].iloc[0]],
-                "n_rows": [int(n)],
-                "slope": [slope],
-                "intercept": [intercept],
-            }
-        )
-
-    return stats.groupBy(key).applyInPandas(solve, schema=MODEL_SCHEMA)
-
-
-def train_linreg_closed_form(
-    ticks: DataFrame,
-    key: str = "symbol",
-    x: str = "open",
-    y: str = "close",
-) -> DataFrame:
-    """Per-key OLS with the solve as Catalyst expressions — the same
-    decimal sufficient statistics and the same IEEE expression tree as
-    :func:`train_linreg_per_key`'s Arrow kernel (slope =
-    (n*sxy - sx*sy)/(n*sxx - sx*sx), bit-identical float order), with
-    no Python stage at all.
-
-    Exists for consumers on the scoring hot path
-    (pergroup_model_scoring): the Arrow kernel variant is the M3
-    operator demo (the harness a generic estimator plugs into); when
-    the model HAS a closed form, round-4 profiling showed the
-    one-row-per-key Python worker round-trip was ~0.3 s of a ~1.1 s
-    query — pure fixed overhead, so the whole plan stays in
-    whole-stage codegen here instead."""
-    from stock_trend_predictor_spark.functions.exact import DECIMAL_T
-
-    cx, cy = F.col(x), F.col(y)
-    n = F.col("n").cast("double")
-    denom = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    slope = F.when(
-        denom != 0,
-        (n * F.col("sxy") - F.col("sx") * F.col("sy")) / denom,
-    ).otherwise(F.lit(0.0))
+    x, y = F.col("open"), F.col("close")
+    n, sx, sy, sxy, sxx = (F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx"))
     return (
-        ticks.where(cx.isNotNull() & cy.isNotNull())
-        .groupBy(key)
+        ticks.where(x.isNotNull() & y.isNotNull())
+        .groupBy("symbol")
         .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(cx.cast(DECIMAL_T)).cast("double").alias("sx"),
-            F.sum(cy.cast(DECIMAL_T)).cast("double").alias("sy"),
-            F.sum((cx * cy).cast(DECIMAL_T)).cast("double").alias("sxy"),
-            F.sum((cx * cx).cast(DECIMAL_T)).cast("double").alias("sxx"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(x.cast(DECIMAL_T)).cast("double").alias("sx"),
+            F.sum(y.cast(DECIMAL_T)).cast("double").alias("sy"),
+            F.sum((x * y).cast(DECIMAL_T)).cast("double").alias("sxy"),
+            F.sum((x * x).cast(DECIMAL_T)).cast("double").alias("sxx"),
         )
-        .withColumn("_slope", slope)
+        .withColumn("n", F.col("n_rows").cast("double"))
+        .withColumn("slope", slope(n, sx, sy, sxy, sxx))
         .select(
-            F.col(key).alias("symbol"),
-            F.col("n").alias("n_rows"),
-            F.col("_slope").alias("slope"),
-            F.when(
-                n > 0,
-                (F.col("sy") - F.col("_slope") * F.col("sx")) / n,
-            ).otherwise(F.lit(0.0)).alias("intercept"),
+            "symbol",
+            "n_rows",
+            "slope",
+            ((sy - F.col("slope") * sx) / n).alias("intercept"),
         )
     )
+
+
+def train_linreg_closed_form(ticks: DataFrame) -> DataFrame:
+    """Per-key OLS of close on open: slope = (n*Σxy - Σx*Σy) /
+    (n*Σxx - Σx*Σx), the expression order of the oracle SQL, so the
+    coefficients are bit-identical to DuckDB's. A constant-open key
+    has a zero denominator and gets slope 0 (its model predicts the
+    mean close)."""
+
+    def ols(n, sx, sy, sxy, sxx):
+        denom = n * sxx - sx * sx
+        return F.when(denom != 0, (n * sxy - sx * sy) / denom).otherwise(
+            F.lit(0.0)
+        )
+
+    return _fit(ticks, ols)
 
 
 def score_with_models(ticks: DataFrame, models: DataFrame) -> DataFrame:
@@ -178,51 +105,17 @@ def score_with_models(ticks: DataFrame, models: DataFrame) -> DataFrame:
     )
 
 
-def train_ridge_per_key(
-    ticks: DataFrame,
-    lam: float = 10.0,
-    key: str = "symbol",
-    x: str = "open",
-    y: str = "close",
-) -> DataFrame:
-    """Per-key ridge regression (L2 penalty on the slope): the same
-    two-stage harness as :func:`train_linreg_per_key` — decimal
-    sufficient statistics JVM-side, closed-form solve in the Arrow
-    kernel — because ridge still HAS a sufficient-statistic form:
-    slope = Sxy_c / (Sxx_c + lam) on centered moments. Shrinkage
-    toward 0 regularizes the near-constant-x keys where plain OLS
-    is ill-conditioned (the denominator guard case in the OLS solve).
-    """
-    from stock_trend_predictor_spark.functions.exact import DECIMAL_T
+def train_ridge_per_key(ticks: DataFrame, lam: float = 10.0) -> DataFrame:
+    """Per-key ridge regression (L2 penalty on the slope) over the same
+    decimal sufficient statistics as :func:`train_linreg_closed_form`,
+    because ridge still HAS a sufficient-statistic form: slope =
+    Sxy_c / (Sxx_c + lam) on centered moments. Shrinkage toward 0
+    regularizes the near-constant-x keys where plain OLS is
+    ill-conditioned (the denominator guard case in the OLS solve).
+    The expression order mirrors the oracle SQL text exactly (IEEE
+    evaluation-order parity)."""
 
-    cx, cy = F.col(x), F.col(y)
-    stats = (
-        ticks.where(cx.isNotNull() & cy.isNotNull())
-        .groupBy(key)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(cx.cast(DECIMAL_T)).cast("double").alias("sx"),
-            F.sum(cy.cast(DECIMAL_T)).cast("double").alias("sy"),
-            F.sum((cx * cy).cast(DECIMAL_T)).cast("double").alias("sxy"),
-            F.sum((cx * cx).cast(DECIMAL_T)).cast("double").alias("sxx"),
-        )
-    )
+    def ridge(n, sx, sy, sxy, sxx):
+        return (sxy - sx * sy / n) / (sxx - sx * sx / n + lam)
 
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = float(pdf["n"].iloc[0])
-        sx, sy = float(pdf["sx"].iloc[0]), float(pdf["sy"].iloc[0])
-        sxy, sxx = float(pdf["sxy"].iloc[0]), float(pdf["sxx"].iloc[0])
-        # expression order mirrors the SQL oracle text exactly (IEEE
-        # evaluation-order parity)
-        slope = (sxy - sx * sy / n) / (sxx - sx * sx / n + lam)
-        intercept = (sy - slope * sx) / n
-        return pd.DataFrame(
-            {
-                "symbol": [pdf[key].iloc[0]],
-                "n_rows": [int(n)],
-                "slope": [slope],
-                "intercept": [intercept],
-            }
-        )
-
-    return stats.groupBy(key).applyInPandas(solve, schema=MODEL_SCHEMA)
+    return _fit(ticks, ridge)

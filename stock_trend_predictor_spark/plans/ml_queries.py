@@ -1,5 +1,5 @@
-"""ML queries: per-key model fit (applyInPandas, oracle-exact closed
-form) and model scoring (broadcast join + native expressions).
+"""ML queries: per-key model fit (oracle-exact closed form solved in
+Catalyst) and model scoring (broadcast join + native expressions).
 
 The MLlib RandomForest pipeline (ml/pipeline.py) is covered by
 tests/test_ml.py — RF predictions are not SQL-expressible, so it is
@@ -15,7 +15,7 @@ from stock_trend_predictor_spark.functions.exact import stable_round_sql
 from stock_trend_predictor_spark.ml.pergroup import (
     score_with_models,
     train_linreg_closed_form,
-    train_linreg_per_key,
+    train_ridge_per_key,
 )
 from stock_trend_predictor_spark.sources.tables import (
     TICKS_ORACLE_CTE,
@@ -23,7 +23,8 @@ from stock_trend_predictor_spark.sources.tables import (
     ticks,
 )
 
-_MODEL_AGG_CTE = f"""
+# The per-key sufficient sums both model oracles solve over.
+_SUMS_CTE = f"""
 {TICKS_ORACLE_CTE},
 clean AS (
     SELECT symbol, ts, open, close FROM ticks
@@ -36,7 +37,9 @@ clean AS (
            CAST(SUM(CAST(open * close AS DECIMAL(27,6))) AS DOUBLE) AS sxy,
            CAST(SUM(CAST(open * open AS DECIMAL(27,6))) AS DOUBLE) AS sxx
     FROM clean GROUP BY symbol
-), models AS (
+)"""
+
+_MODEL_AGG_CTE = f"""{_SUMS_CTE}, models AS (
     SELECT symbol,
            CAST(n AS BIGINT) AS n_rows,
            (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope,
@@ -58,12 +61,13 @@ SELECT symbol, n_rows,
        {stable_round_sql('intercept', 6)} AS intercept
 FROM models
 """,
-        doc="M3 per-key model fit, parallelized: groupBy(symbol)."
-        "applyInPandas replaces the reference's sequential driver loop "
+        doc="M3 per-key model fit, parallelized: one groupBy(symbol) "
+        "aggregation of decimal sufficient sums, solved as Catalyst "
+        "expressions, replaces the reference's sequential driver loop "
         "(predict_from_vm4.py:29-39). Closed-form OLS with decimal-"
         "quantized sums makes the fitted coefficients themselves "
-        "oracle-checkable — the Arrow round trip and group partitioning "
-        "are verified end-to-end, not just row counts.",
+        "oracle-checkable — the group partitioning and the solve are "
+        "verified end-to-end, not just row counts.",
     )
     def pergroup_linreg_models(spark: SparkSession, sf_dir: str) -> DataFrame:
         from stock_trend_predictor_spark.functions.exact import stable_round
@@ -71,7 +75,7 @@ FROM models
         t = ticks(spark, sf_dir).where(
             F.col("open").isNotNull() & F.col("close").isNotNull()
         )
-        m = train_linreg_per_key(t)
+        m = train_linreg_closed_form(t)
         return m.select(
             "symbol",
             "n_rows",
@@ -80,20 +84,7 @@ FROM models
         )
 
     _RIDGE_LAM = 10.0
-    _RIDGE_CTE = f"""
-{TICKS_ORACLE_CTE},
-clean AS (
-    SELECT symbol, ts, open, close FROM ticks
-    WHERE open IS NOT NULL AND close IS NOT NULL
-), agg AS (
-    SELECT symbol,
-           CAST(COUNT(*) AS DOUBLE) AS n,
-           CAST(SUM(CAST(open AS DECIMAL(27,6))) AS DOUBLE) AS sx,
-           CAST(SUM(CAST(close AS DECIMAL(27,6))) AS DOUBLE) AS sy,
-           CAST(SUM(CAST(open * close AS DECIMAL(27,6))) AS DOUBLE) AS sxy,
-           CAST(SUM(CAST(open * open AS DECIMAL(27,6))) AS DOUBLE) AS sxx
-    FROM clean GROUP BY symbol
-), ridge AS (
+    _RIDGE_CTE = f"""{_SUMS_CTE}, ridge AS (
     SELECT symbol,
            CAST(n AS BIGINT) AS n_rows,
            (sxy - sx * sy / n) / (sxx - sx * sx / n + {_RIDGE_LAM}) AS slope
@@ -112,19 +103,16 @@ SELECT r.symbol, r.n_rows,
 FROM ridge r JOIN agg a ON r.symbol = a.symbol
 """,
         doc="Per-key RIDGE fit (lambda=10 L2 penalty on the slope) "
-        "through the same two-stage harness as the OLS sibling: "
-        "decimal sufficient statistics JVM-side (one pass, 5 numbers "
-        "per key shuffle), closed-form shrinkage solve in the Arrow "
-        "kernel. Centered-moment expression order is written "
-        "identically in the Python kernel and the oracle SQL, so the "
-        "shrunk coefficients are value-hash exact — regularization "
-        "without losing oracle checkability.",
+        "over the same decimal sufficient statistics as the OLS "
+        "sibling (one pass, 5 numbers per key shuffle), with the "
+        "closed-form shrinkage solve as Catalyst expressions. "
+        "Centered-moment expression order is written identically in "
+        "the Catalyst solve and the oracle SQL, so the shrunk "
+        "coefficients are value-hash exact — regularization without "
+        "losing oracle checkability.",
     )
     def pergroup_ridge_models(spark: SparkSession, sf_dir: str) -> DataFrame:
         from stock_trend_predictor_spark.functions.exact import stable_round
-        from stock_trend_predictor_spark.ml.pergroup import (
-            train_ridge_per_key,
-        )
 
         t = ticks(spark, sf_dir).where(
             F.col("open").isNotNull() & F.col("close").isNotNull()
@@ -161,8 +149,6 @@ FROM clean t JOIN models m ON t.symbol = m.symbol
             .where(F.col("open").isNotNull() & F.col("close").isNotNull())
             .select("symbol", "ts", "open", "close")
         )
-        # Closed-form trainer on the scoring hot path (bit-identical
-        # coefficients, no Python stage — see train_linreg_closed_form)
         models = train_linreg_closed_form(t)
         return score_with_models(t, models)
 
@@ -326,8 +312,8 @@ GROUP BY symbol, bin
         # binary column, broadcast + batch-unpickled scoring — which by
         # construction has no SQL-expressible equivalent (the
         # closed-form sibling pergroup_model_scoring carries the
-        # oracle-exact form of the same harness). Laws are pytest-
-        # gated instead: tests/test_ml.py::test_pickled_blob_models_*
+        # oracle-exact form of the same fit-then-score flow). Laws are
+        # pytest-gated instead: tests/test_ml.py::test_pickled_blob_models_*
         # checks >=100 keys, per-key prediction equality with a local
         # numpy fit, and that only (key, n_rows, blob) leaves the fit
         # task.

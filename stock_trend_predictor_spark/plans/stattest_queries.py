@@ -1723,9 +1723,7 @@ FROM mw
         "chi-square(k-1); each MW pair carries (stat=U_a, z) vs "
         "N(0,1). Same tie corrections, DECIMAL rank sums, and "
         "overflow-hardened (decimal cube / double product) "
-        "arithmetic as the standalone family members. The measured "
-        "sharing win vs running the members separately is published "
-        "in BENCH_DELTA_LOCAL.md.",
+        "arithmetic as the standalone family members.",
     )
     def rank_tests_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = (

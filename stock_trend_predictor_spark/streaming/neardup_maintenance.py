@@ -83,7 +83,7 @@ Per-commit IO is batch-sized on BOTH sides now:
   grown via rebucket_neardup_state), a bucket directory holds a bounded row
   count, so probe READ IO ~ (batch's bucket count) x (bounded bucket
   size) + the few uncompacted deltas — batch-proportional, not
-  O(corpus) (measured: tools/probe_bench.py, SCALE.md r7). Every row
+  O(corpus) (measured: SCALE.md r7). Every row
   carries its bucket, so the threshold crossing and the
   delta/compacted mix are invisible to readers. The CLUSTER MERGE's
   label reads prune the same way since r8 (the r7 verdict's one

@@ -16,7 +16,7 @@ QUERIES = [
     "flagship_movement_rate",   # decimal avg of change%
     "q1_pricing_summary",       # 8 decimal aggregates
     "vwap_per_supplier",        # ratio of decimal sums
-    "pergroup_linreg_models",   # Arrow solve over decimal stats
+    "pergroup_linreg_models",   # Catalyst solve over decimal stats
     "stats_battery",            # percentiles + sufficient-sum moments
     "dedup_minhash_lsh",        # mega-bucket cap must not alter pairs
     "feature_decile_binning",   # broadcast percentile cut points

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from stock_trend_predictor_spark.ml.pergroup import (
     score_with_models,
-    train_linreg_per_key,
+    train_linreg_closed_form,
 )
 from stock_trend_predictor_spark.ml.pipeline import (
     train_and_evaluate,
@@ -96,13 +96,37 @@ def test_pergroup_linreg_recovers_slope(spark):
         for sym in ("A", "B")
         for x in range(1, 51)
     ]
-    df = spark.createDataFrame(rows, "symbol string, open double, close double")
-    models = {r["symbol"]: r for r in train_linreg_per_key(df).collect()}
-    assert set(models) == {"A", "B"}
+    # constant open → zero denominator: slope 0, intercept = mean close
+    const = [("C", 7.0, float(2 * i + 1)) for i in range(1, 51)]
+    df = spark.createDataFrame(
+        rows + const, "symbol string, open double, close double"
+    )
+    models = {r["symbol"]: r for r in train_linreg_closed_form(df).collect()}
+    assert set(models) == {"A", "B", "C"}
+    c = models.pop("C")
+    assert c["n_rows"] == 50
+    assert c["slope"] == 0.0
+    assert abs(c["intercept"] - sum(r[2] for r in const) / 50) < 1e-9
     for m in models.values():
         assert m["n_rows"] == 50
         assert abs(m["slope"] - 2.0) < 1e-9
         assert abs(m["intercept"] - 5.0) < 1e-6
+
+
+def test_pergroup_trainers_have_no_python_stage(spark):
+    """Both closed-form trainers solve as Catalyst expressions over one
+    native aggregation: no Arrow or row-at-a-time Python operator may
+    appear in either physical plan."""
+    from stock_trend_predictor_spark.ml.pergroup import train_ridge_per_key
+
+    df = spark.createDataFrame(
+        [("A", 1.0, 3.0), ("A", 2.0, 5.0)],
+        "symbol string, open double, close double",
+    )
+    for models in (train_linreg_closed_form(df), train_ridge_per_key(df)):
+        plan = models._jdf.queryExecution().executedPlan().toString()
+        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
 
 
 def test_score_with_models_outputs(spark):
@@ -110,7 +134,7 @@ def test_score_with_models_outputs(spark):
         [("A", f"2024-01-01 00:0{i}:00", 10.0 + i, 20.0 + 2 * i) for i in range(5)],
         "symbol string, ts string, open double, close double",
     ).withColumn("ts", F.to_timestamp("ts"))
-    models = train_linreg_per_key(df)
+    models = train_linreg_closed_form(df)
     scored = score_with_models(df, models)
     rows = scored.collect()
     assert len(rows) == 5
@@ -246,7 +270,7 @@ def test_isotonic_pava_matches_python_and_laws(spark, sf_dir):
 
     from stock_trend_predictor_spark.ml.pergroup import (
         score_with_models,
-        train_linreg_per_key,
+        train_linreg_closed_form,
     )
     from stock_trend_predictor_spark.plans import REGISTRY
     from stock_trend_predictor_spark.sources.tables import ticks
@@ -260,7 +284,7 @@ def test_isotonic_pava_matches_python_and_laws(spark, sf_dir):
         .where(F.col("open").isNotNull() & F.col("close").isNotNull())
         .select("symbol", "ts", "open", "close")
     )
-    scored = score_with_models(t, train_linreg_per_key(t)).collect()
+    scored = score_with_models(t, train_linreg_closed_form(t)).collect()
     pairs = defaultdict(list)
     for r in scored:
         pairs[r.symbol].append((r.predicted_close, r.close))

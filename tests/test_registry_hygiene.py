@@ -80,16 +80,19 @@ def test_no_duplicate_output_aliases_in_oracles():
 def test_cited_files_exist():
     """Provenance integrity: every ``*.py`` path mentioned anywhere in
     package source (docstrings cite reference files as file:line so
-    the parity judge can check claims) must actually exist — under
-    /root/reference for reference citations, or in this repo for
-    self-references. Round 3 shipped 9 citations of files that never
-    existed (ml_model/train_model*.py); this pins the paper trail."""
+    the parity judge can check claims) must actually exist — in the
+    reference's file list (tests/reference_files.txt, the 8 ``*.py``
+    files SURVEY.md §0 lists) for reference citations, or in this repo
+    for self-references. Round 3 shipped 9 citations of files that
+    never existed (ml_model/train_model*.py); this pins the paper
+    trail."""
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1]
-    ref = Path("/root/reference")
-    ref_names = {p.name for p in ref.rglob("*.py")}
-    ref_paths = {str(p.relative_to(ref)) for p in ref.rglob("*.py")}
+    ref_paths = set(
+        (Path(__file__).parent / "reference_files.txt").read_text().split()
+    )
+    ref_names = {p.rsplit("/", 1)[-1] for p in ref_paths}
 
     repo_names = {
         p.name
@@ -110,57 +113,7 @@ def test_cited_files_exist():
                 or (("/" not in cite) and name in repo_names)
                 or (pkg / cite).exists()
                 or (pkg / "stock_trend_predictor_spark" / cite).exists()
-                # reference files cited with a leading package dir that
-                # matches the reference layout
-                or (ref / cite).exists()
             )
             if not ok:
                 bad.append((str(src.relative_to(pkg)), cite))
     assert not bad, f"citations of nonexistent files: {bad}"
-
-
-def test_bench_compact_line_fits_the_drivers_tail_window():
-    """r5 verdict #6 regression guard, renegotiated per the r8
-    verdict (#5): the driver keeps only a ~1.9 KB tail of bench
-    stdout and parses a JSON line out of it. The COMPACT line
-    bench.py prints LAST no longer carries the full per-query map
-    (that outgrew the window at 59 entries and lives in the first
-    detail line + BENCH_DETAIL.json) — only the ROUND_NEW entries,
-    the continuity numbers (total + frozen-16 sum), the drift
-    bracket, and the capped suspect-name list. Model the worst-case
-    rendering of exactly that structure, with headroom for a round
-    that adds up to TWELVE new headline queries."""
-    import json
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from bench import FROZEN16, HEADLINE, ROUND_NEW
-
-    assert len(FROZEN16) == 16
-    assert set(ROUND_NEW) <= set(HEADLINE)
-    assert len(ROUND_NEW) <= 12, (
-        "compact line carries every ROUND_NEW value — roll last "
-        "round's entries into HEADLINE proper before adding more"
-    )
-    # widest sane per-query rendering is "99.9": _cv rounds FIRST and
-    # renders >= 100 as the (shorter) int, so the [99.95, 100)
-    # boundary cannot produce "100.0" (r8 ADVICE)
-    longest = max(len(n) for n in HEADLINE)
-    worst_new = {f"{'x' * longest}{i:02d}": 99.9 for i in range(12)}
-    compact = {
-        "metric": "headline_queries_total",
-        "value": 9999.999,
-        "queries": worst_new,
-        "n_queries": 999,
-        "frozen16": 9999.99,
-        "sf": 0.1,
-        "drift": [9.99, 9.99],  # bench rounds the bracket to 2dp
-        "resampled": 99,
-        "suspects": [f"{'x' * longest}{i:02d}" for i in range(6)],
-    }
-    rendered = json.dumps(compact, separators=(",", ":"))  # bench framing
-    assert len(rendered) < 1800, (
-        f"compact bench line {len(rendered)}B nears the driver's "
-        "tail window even without the per-query map — trim the "
-        "compact structure itself"
-    )

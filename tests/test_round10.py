@@ -168,7 +168,7 @@ def test_progress_meta_last_write_wins_and_survives(spark, tmp_path):
 
 def test_zipf_tail_token_geometric_df_law(spark):
     """df(zt_j) ~ N * 2**-(j+1): the generator-native vocabulary tail
-    probe_bench's BM25 selective row relies on — some level's df sits
+    a BM25 selective-term probe relies on — some level's df sits
     in [top_k, 4*top_k) at any corpus size, so a natural rare term
     always exists (the raw synthetic vocabulary's df floor is ~3% of
     the corpus)."""

@@ -135,7 +135,7 @@ def test_statestore_compaction_identity_and_crash(spark, tmp_path):
     # nothing to do on a single-segment table...
     assert not compact_append_table(spark, sdir, "t")
     # ...unless a re-layout is requested (the plain-delta -> bucketed
-    # conversion probe_bench and the periodic fold compaction use)
+    # conversion the periodic fold compaction uses)
     assert compact_append_table(
         spark, sdir, "t", repartition_by=["bucket"]
     )

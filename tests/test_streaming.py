@@ -692,7 +692,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 def test_streaming_inference_foreachbatch(spark, tmp_path):
     """ST7: train once on history, score the stream set-oriented in
     foreachBatch, per-symbol partitioned sink (S9)."""
-    from stock_trend_predictor_spark.ml.pergroup import train_linreg_per_key
+    from stock_trend_predictor_spark.ml.pergroup import train_linreg_closed_form
     from stock_trend_predictor_spark.streaming.scoring import streaming_score
 
     history = spark.createDataFrame(
@@ -700,7 +700,7 @@ def test_streaming_inference_foreachbatch(spark, tmp_path):
         + [("MSFT", float(o), 0.5 * o + 3.0) for o in range(1, 21)],
         "symbol string, open double, close double",
     )
-    models = train_linreg_per_key(history)
+    models = train_linreg_closed_form(history)
 
     src = tmp_path / "in"
     src.mkdir()

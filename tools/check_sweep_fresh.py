@@ -1,6 +1,6 @@
 """Mechanical enforcement of the sweep-ordering protocol rule
-(COVERAGE.md, r10): the shipped full-sweep artifact
-(``DRIVER_SIM_r{N}_sf01.log``) must agree with the LIVE registry —
+(COVERAGE.md, r10): a captured full-sweep log (the stdout of
+``tools/driver_sim.py``) must agree with the LIVE registry —
 same query set, same per-query oracle/rows-only mode, zero failures.
 
 The r9 verdict's finding #1 was exactly this class of drift: the
@@ -11,7 +11,8 @@ commit") prevents the recurrence only if someone checks; this tool IS
 the check — run it against the log right after capturing it, and
 again before shipping the round:
 
-    python tools/check_sweep_fresh.py DRIVER_SIM_r10_sf01.log
+    python tools/driver_sim.py > sweep.log
+    python tools/check_sweep_fresh.py sweep.log
 
 Exit 0 = the artifact matches the registry exactly. Exit 1 prints
 every disagreement: missing/extra queries, mode flips (a query the

@@ -1,15 +1,19 @@
-"""Time registry queries under bench-identical conditions (r11).
+"""Time registry queries one at a time, the way perfbench times them.
 
 Usage:
     python tools/profile_query.py NAME [NAME ...] [--runs N] [--explain DIR]
 
-Reproduces bench.py's measurement methodology exactly — local[$SPARK_GRAFT_CPUS],
-shuffle.partitions=$SPARK_GRAFT_CPUS, the same extra conf, the same warmup,
-noop-sink timing — for a SUBSET of queries, so an optimization loop can
-iterate on one query without paying for the whole headline set.
+After a warm-up at sf0.001, each query is written to the noop sink
+--runs times on local[$SPARK_GRAFT_CPUS] with
+shuffle.partitions=$SPARK_GRAFT_CPUS. The "best" figure is the fastest
+call, which is the statistic perfbench's stock_analytics workload
+reports per query (perfbench/README.md: the host steals CPU in
+episodes, so the fastest of several samples of the same work is the
+stable number); "median" and "samples" are printed too. Use it to
+iterate on a few queries without a whole benchmark run.
 
 With --explain DIR, also writes DIR/<name>.txt with the
-``explain("formatted")`` output of each query (the r11 plan artifacts).
+``explain("formatted")`` output of each query.
 """
 
 from __future__ import annotations

@@ -6,16 +6,17 @@ index.
 
 For each maintained fold (near-dup, decontamination, DSIR, budget
 admission, SemDeDup, kNN graph, BM25 index — the complete family),
-this builds the fold state over /root/testdata/sf0.1 and over the
-tools/scaleup.py 30x replica dir (build once, excluded from timing),
-then times ONE fold of the SAME fixed 16-item batch into each and
-reports the commit's write bytes (META segment diff — the write-IO
-law's method). The batch items are real corpus items with remapped
-ids, so they are near-duplicates of existing content and exercise the
-merge paths (label revisions / toplist revisions), not just appends.
+this builds the fold state over the sf0.1 tables (``SRC``) and over a
+30x replica of them at $SCALEUP_DST (copied 30 times with shifted
+keys; its builder, tools/scaleup.py, left the tree with the legacy
+bench stack and is in the git history), then times ONE fold
+of the SAME fixed 16-item batch into each and reports the commit's
+write bytes (META segment diff — the write-IO law's method). The
+batch items are real corpus items with remapped ids, so they are
+near-duplicates of existing content and exercise the merge paths
+(label revisions / toplist revisions), not just appends.
 
 Usage:
-    python tools/scaleup.py build        # once per box boot
     python tools/steady_bench.py         # prints the markdown table
     STEADY_PRUNE0=1 python tools/steady_bench.py   # ENGAGED pruned
         # regime (r8 verdict #1): every adaptive read is forced to
