@@ -1,16 +1,16 @@
-"""Content-based stream routing + partitioned sinks.
+"""Content-based stream routing into history, realtime and DLQ sinks.
 
 Replaces the reference's Mongo CDC router
 (streaming_processing/mongo_stream_etl.py:34-38: per-event
 `if source == "history": insert_one(A) else insert_one(B)`) with
-set-oriented foreachBatch writes, and the per-symbol dynamic
-collections (ml_model/predict_from_vm4.py:64-65:
-`predicted_output_{symbol}`) with a partitionBy("symbol") layout.
+set-oriented foreachBatch writes.
 
-Scale notes: each micro-batch performs two filtered columnar writes
-(predicate evaluated once per batch, not per row); partitionBy gives
-the per-key layout without one-connection-per-key; checkpointing makes
-the router exactly-once per batch id.
+Scale notes: each micro-batch tags every row with its route once,
+persists the tagged batch and counts it per route. That count runs the
+stateful dedup upstream on all its shuffle partitions in parallel and
+fills the cache. Each route that has rows is then written from the
+cache as one file; an empty route, such as the watermark's no-data
+batch, starts no write job and leaves no file.
 """
 
 from __future__ import annotations
@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+_ROUTE = "_route"
 
 
 def route_by_source(
@@ -27,43 +29,43 @@ def route_by_source(
     checkpoint: str,
     corrupt_path: str | None = None,
 ) -> StreamingQuery:
-    """history/realtime/DLQ three-way split, exactly-once per batch."""
+    """history/realtime/DLQ three-way split, one file per non-empty
+    route per micro-batch.
+
+    The sinks are at-least-once: a replayed ``foreachBatch`` appends
+    its batch again (see ROADMAP's exactly-once item). Corrupt rows are
+    dropped when ``corrupt_path`` is None.
+    """
+    sinks = {"history": history_path, "realtime": realtime_path}
+    if corrupt_path is not None:
+        sinks["dlq"] = corrupt_path
+    route = (
+        F.when(F.col("is_corrupt"), "dlq")
+        .when(F.col("source") == "history", "history")
+        .otherwise("realtime")
+    )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
+        tagged = batch.withColumn(_ROUTE, route).persist()
         try:
-            good = batch.where(~F.col("is_corrupt"))
-            good.where(F.col("source") == "history").drop(
-                "is_corrupt", "_raw"
-            ).write.mode("append").parquet(history_path)
-            good.where(F.col("source") != "history").drop(
-                "is_corrupt", "_raw"
-            ).write.mode("append").parquet(realtime_path)
-            if corrupt_path is not None:
-                batch.where(F.col("is_corrupt")).select("_raw").write.mode(
-                    "append"
-                ).parquet(corrupt_path)
+            # Fills the cache with the full-width dedup stage before the
+            # one-task writes below read it.
+            counts = dict(tagged.groupBy(_ROUTE).count().collect())
+            for name, path in sinks.items():
+                if not counts.get(name):
+                    continue
+                rows = tagged.where(F.col(_ROUTE) == name)
+                if name == "dlq":
+                    rows = rows.select("_raw")
+                else:
+                    rows = rows.drop("is_corrupt", "_raw", _ROUTE)
+                rows.coalesce(1).write.mode("append").parquet(path)
         finally:
-            batch.unpersist()
+            tagged.unpersist()
 
     return (
         ticks.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def write_partitioned_by_symbol(
-    df: DataFrame, path: str, checkpoint: str
-) -> StreamingQuery:
-    """S9: per-key partitioned sink — the scalable form of the
-    reference's per-symbol output collections."""
-    return (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy("symbol")
         .trigger(availableNow=True)
         .start()
     )

@@ -2,12 +2,14 @@
 
 The reference scores one Mongo change-stream document at a time
 (ml_model/predict_from_vm4.py:47-65: per-event model.predict on a
-1-row frame, insert_many per event). Spark-first, scoring is
+1-row frame, insert_many per event) into one output collection per
+symbol (`predicted_output_{symbol}`). Spark-first, scoring is
 set-oriented inside foreachBatch: each micro-batch is one broadcast
 join against the (tiny, pre-trained) models table plus native
-expressions — thousands of rows per task, zero Python in the scoring
-path — written to a per-symbol partitioned parquet sink (S9, replacing
-the predicted_output_{symbol} dynamic collections).
+expressions — zero Python in the scoring path — written as one
+parquet file per batch, sorted by symbol. `symbol` is a data column;
+a reader that wants one symbol skips row groups by their min/max
+statistics instead of listing one directory per symbol (S9).
 """
 
 from __future__ import annotations
@@ -36,7 +38,9 @@ def streaming_score(
         scored = score_with_models(
             batch.select("symbol", "ts", "open", "close"), models
         )
-        scored.write.mode("append").partitionBy("symbol").parquet(out_path)
+        scored.coalesce(1).sortWithinPartitions("symbol").write.mode(
+            "append"
+        ).parquet(out_path)
 
     return (
         ticks_stream.writeStream.foreachBatch(score_batch)
