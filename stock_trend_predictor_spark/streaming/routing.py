@@ -5,12 +5,11 @@ Replaces the reference's Mongo CDC router
 `if source == "history": insert_one(A) else insert_one(B)`) with
 set-oriented foreachBatch writes.
 
-Scale notes: each micro-batch tags every row with its route once,
-persists the tagged batch and counts it per route. That count runs the
-stateful dedup upstream on all its shuffle partitions in parallel and
-fills the cache. Each route that has rows is then written from the
-cache as one file; an empty route, such as the watermark's no-data
-batch, starts no write job and leaves no file.
+Scale notes: each micro-batch is persisted and counted per route. That
+count runs the stateful dedup upstream on all its shuffle partitions in
+parallel and fills the cache. Each route that has rows is then written
+from the cache as one file; an empty route, such as the watermark's
+no-data batch, starts no write job and leaves no file.
 """
 
 from __future__ import annotations
@@ -18,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-
-_ROUTE = "_route"
 
 
 def route_by_source(
@@ -46,22 +43,22 @@ def route_by_source(
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        tagged = batch.withColumn(_ROUTE, route).persist()
+        batch = batch.persist()
         try:
-            # Fills the cache with the full-width dedup stage before the
-            # one-task writes below read it.
-            counts = dict(tagged.groupBy(_ROUTE).count().collect())
+            # Runs the dedup on all its shuffle partitions and fills the
+            # cache before the one-task writes below read it.
+            counts = dict(batch.groupBy(route).count().collect())
             for name, path in sinks.items():
                 if not counts.get(name):
                     continue
-                rows = tagged.where(F.col(_ROUTE) == name)
+                rows = batch.where(route == name)
                 if name == "dlq":
                     rows = rows.select("_raw")
                 else:
-                    rows = rows.drop("is_corrupt", "_raw", _ROUTE)
+                    rows = rows.drop("is_corrupt", "_raw")
                 rows.coalesce(1).write.mode("append").parquet(path)
         finally:
-            tagged.unpersist()
+            batch.unpersist()
 
     return (
         ticks.writeStream.foreachBatch(write_batch)

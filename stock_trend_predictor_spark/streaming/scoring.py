@@ -7,9 +7,8 @@ symbol (`predicted_output_{symbol}`). Spark-first, scoring is
 set-oriented inside foreachBatch: each micro-batch is one broadcast
 join against the (tiny, pre-trained) models table plus native
 expressions — zero Python in the scoring path — written as one
-parquet file per batch, sorted by symbol. `symbol` is a data column;
-a reader that wants one symbol skips row groups by their min/max
-statistics instead of listing one directory per symbol (S9).
+parquet file per batch with `symbol` as a data column (S9), not one
+small file per symbol per batch.
 """
 
 from __future__ import annotations
@@ -38,9 +37,7 @@ def streaming_score(
         scored = score_with_models(
             batch.select("symbol", "ts", "open", "close"), models
         )
-        scored.coalesce(1).sortWithinPartitions("symbol").write.mode(
-            "append"
-        ).parquet(out_path)
+        scored.coalesce(1).write.mode("append").parquet(out_path)
 
     return (
         ticks_stream.writeStream.foreachBatch(score_batch)

@@ -461,12 +461,12 @@ def test_route_by_source_one_file_per_route_per_batch(spark, tmp_path):
     src = tmp_path / "in"
     src.mkdir()
     symbols = [f"S{i:02d}" for i in range(16)]
-    # batch 0: history and realtime ticks over 16 symbols, one bad line
+    # batch 0: a history and a realtime tick for each of 16 symbols,
+    # one bad line
     _write_jsonl(src / "b0.jsonl", [
-        {"timestamp": f"2024-01-01 09:{30 + m}:00", "symbol": s,
-         "open": 1.0, "close": 1.0,
-         "source": "history" if m < 3 else "realtime"}
-        for s in symbols for m in range(6)
+        {"timestamp": f"2024-01-01 09:3{m}:00", "symbol": s,
+         "open": 1.0, "close": 1.0, "source": source}
+        for s in symbols for m, source in enumerate(("history", "realtime"))
     ], extra_raw=[MALFORMED])
     # batch 1: realtime only, an hour later; the watermark passes every
     # batch-0 key, so a no-data batch follows to evict them
@@ -487,15 +487,15 @@ def test_route_by_source_one_file_per_route_per_batch(spark, tmp_path):
     q.awaitTermination(180)
 
     inputs = [p["numInputRows"] for p in q.recentProgress]
-    assert [n for n in inputs if n] == [97, 16]
+    assert [n for n in inputs if n] == [33, 16]
     assert inputs[-1] == 0  # the watermark's no-data batch ran last
     assert len(_parquet_parts(hist)) == 1
     assert len(_parquet_parts(rt)) == 2
     assert len(_parquet_parts(dlq)) == 1
     hist_rows = spark.read.parquet(hist).collect()
     rt_rows = spark.read.parquet(rt).collect()
-    assert len(hist_rows) == 48 and all(r["source"] == "history" for r in hist_rows)
-    assert len(rt_rows) == 64 and all(r["source"] != "history" for r in rt_rows)
+    assert len(hist_rows) == 16 and all(r["source"] == "history" for r in hist_rows)
+    assert len(rt_rows) == 32 and all(r["source"] != "history" for r in rt_rows)
     assert spark.read.parquet(dlq).collect()[0]["_raw"] == MALFORMED
 
 
@@ -742,9 +742,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 
 def test_streaming_inference_foreachbatch(spark, tmp_path):
     """ST7: train once on history, score the stream set-oriented in
-    foreachBatch, one symbol-sorted file per batch (S9)."""
-    import pyarrow.parquet as pq
-
+    foreachBatch, one file per batch with symbol a data column (S9)."""
     from stock_trend_predictor_spark.ml.pergroup import train_linreg_closed_form
     from stock_trend_predictor_spark.streaming.scoring import streaming_score
 
@@ -758,8 +756,6 @@ def test_streaming_inference_foreachbatch(spark, tmp_path):
     src = tmp_path / "in"
     src.mkdir()
     _write_jsonl(src / "batch0.jsonl", [
-        {"timestamp": "2024-01-01 09:31:00", "symbol": "MSFT",
-         "open": 12.0, "close": 9.0},
         {"timestamp": "2024-01-01 09:30:00", "symbol": "AAPL",
          "open": 10.0, "close": 30.0},
         {"timestamp": "2024-01-01 09:30:00", "symbol": "MSFT",
@@ -767,8 +763,6 @@ def test_streaming_inference_foreachbatch(spark, tmp_path):
         # no trained model for GOOGL → dropped by the P10 join filter
         {"timestamp": "2024-01-01 09:30:00", "symbol": "GOOGL",
          "open": 1.0, "close": 2.0},
-        {"timestamp": "2024-01-01 09:31:00", "symbol": "AAPL",
-         "open": 12.0, "close": 25.0},
     ])
     out = str(tmp_path / "scored")
     q = streaming_score(
@@ -779,19 +773,12 @@ def test_streaming_inference_foreachbatch(spark, tmp_path):
     )
     q.awaitTermination(120)
 
+    # one file for the batch, symbol stored in it, no symbol= directory
     assert not any(n.startswith("symbol=") for n in os.listdir(out))
     (part,) = _parquet_parts(out)
-    part = os.path.join(out, part)
-    # symbol is a data column of the one file, its rows in symbol order
-    assert "symbol" in spark.read.parquet(part).columns
-    in_file = pq.read_table(part).column("symbol").to_pylist()
-    assert in_file == ["AAPL", "AAPL", "MSFT", "MSFT"]
+    assert "symbol" in spark.read.parquet(os.path.join(out, part)).columns
 
-    rows = {
-        r["symbol"]: r
-        for r in spark.read.parquet(out).collect()
-        if str(r["ts"]) == "2024-01-01 09:30:00"
-    }
+    rows = {r["symbol"]: r for r in spark.read.parquet(out).collect()}
     assert set(rows) == {"AAPL", "MSFT"}  # GOOGL filtered (no model)
     # linreg recovered close = 2*open + 1 → predicted 21.0 for open=10
     assert abs(rows["AAPL"]["predicted_close"] - 21.0) < 1e-6
