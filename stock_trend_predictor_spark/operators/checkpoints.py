@@ -7,9 +7,8 @@ stops multi-consumer recompute), but Spark only frees a local
 checkpoint's executor blocks when the JVM garbage-collects the RDD
 object, which a long-running driver may never do. A continuous
 ``writeStream`` sink therefore accumulated one checkpoint block set
-PER BATCH, unbounded — tools/steady_bench.py's workaround was one
-SparkSession per measurement cell because six 30x builds in a 16 GiB
-JVM OOM'd (r8 ADVICE).
+PER BATCH, unbounded: six 30x fold builds in one 16 GiB JVM OOM'd
+(r8 ADVICE).
 
 ``release_local_checkpoints`` frees those blocks deterministically:
 a checkpointed DataFrame's analyzed plan is a ``LogicalRDD`` leaf

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stock_trend_predictor_spark.functions.exact import DECIMAL_T
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 
 #: alarm threshold in standardized units (matches the batch query).
 CUSUM_THRESHOLD = 3.0
@@ -183,9 +184,4 @@ def cusum_sink(
             key=key, batch_id=batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, write_batch, checkpoint)

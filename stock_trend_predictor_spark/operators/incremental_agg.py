@@ -18,9 +18,9 @@ tests/test_incremental.py under arbitrary batch splits).
 
 Persistence uses the same bucketed dynamic-partition-overwrite pattern
 as streaming/upsert.py, partitioned by day: a batch only rewrites the
-days it touches. Replay safety is the sink's job — drive updates from
-a checkpointed foreachBatch (exactly-once per batch id); the merge
-itself is additive, not idempotent.
+days it touches. The merge is additive, not idempotent, and foreachBatch
+is at-least-once: ``update_rollup_state`` takes no batch id, so a batch
+replayed after a crash is merged twice (ROADMAP's exactly-once item).
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from stock_trend_predictor_spark.functions.exact import DECIMAL_T
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 
 STATE_COLS = ("n", "sum_v", "min_v", "max_v")
 
@@ -122,18 +123,13 @@ def rollup_sink(
     value: str = "value",
 ):
     """Streaming materialized view: each micro-batch's partials merge
-    into the persisted rollup state. The checkpoint gives exactly-once
-    per batch id, which the ADDITIVE merge requires (unlike the upsert
-    sink, replaying a batch here would double-count)."""
+    into the persisted rollup state. At-least-once: unlike the upsert
+    sink, a batch that foreachBatch replays after a crash is merged
+    again, and its partials are counted twice."""
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         update_rollup_state(
             batch.sparkSession, batch, state_dir, key, ts, value
         )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, write_batch, checkpoint)

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
+
 
 def misra_gries_candidates(
     tokens: DataFrame, col: str = "tok", k: int = 64
@@ -300,12 +302,7 @@ def cms_sink(token_stream: DataFrame, state_dir: str, checkpoint: str,
         update_cms_state(batch.sparkSession, batch, state_dir, token_col,
                          batch_id=batch_id)
 
-    return (
-        token_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(token_stream, write_batch, checkpoint)
 
 
 # ---------------------------------------------------------------------
@@ -410,12 +407,7 @@ def heavy_hitters_sink(
             batch_id=batch_id,
         )
 
-    return (
-        token_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(token_stream, write_batch, checkpoint)
 
 
 # ---------------------------------------------------------------------
@@ -489,12 +481,7 @@ def hll_sink(stream: DataFrame, state_dir: str, checkpoint: str,
         update_hll_state(batch.sparkSession, batch, state_dir,
                          key_col, value_col, batch_id=batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, write_batch, checkpoint)
 
 
 # --- deterministic PCA (oracle-replayable power iteration) -----------

@@ -55,6 +55,7 @@ from stock_trend_predictor_spark.operators.statestore import (
     commit_state,
     read_state_table,
 )
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 
 
 def band_keys_for(docs: DataFrame, id_col: str = "doc_id",
@@ -152,12 +153,7 @@ def minhash_admission_sink(
             id_col=id_col, text_col=text_col,
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(doc_stream, write_batch, checkpoint)
 
 
 def read_admitted(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -298,9 +294,4 @@ def span_admission_sink(
             id_col=id_col, text_col=text_col,
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(doc_stream, write_batch, checkpoint)

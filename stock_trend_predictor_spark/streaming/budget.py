@@ -50,6 +50,7 @@ from stock_trend_predictor_spark.operators.statestore import (
     commit_state,
     read_state_table,
 )
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 
 DEFAULT_BUDGET = 20_000  # tokens per source
 
@@ -184,12 +185,7 @@ def budget_admission_sink(
             batch_id=batch_id,
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(doc_stream, write_batch, checkpoint)
 
 
 def read_admitted_docs(

@@ -7,7 +7,8 @@ from_json → console) with the parts it was missing:
 - the OHLCV *superset* schema (§1.4) instead of the close-only struct
   (features_engineering.py:23-27) that silently nulled producer fields;
 - corrupt-record capture (the reference's schema_validation.py is an
-  empty stub; malformed JSON was silently nulled);
+  empty stub; malformed JSON was silently nulled): a line that is not a
+  tick keeps its raw text in `_corrupt_record` for the DLQ;
 - watermark + dropDuplicates replacing the in-driver-memory
   `last_timestamps` dict (fetch_stock.py:43,57,64) that loses state on
   restart and silently drops late rows;
@@ -20,8 +21,11 @@ format — a binary `value` column of JSON — is identical).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -55,16 +59,22 @@ def parse_tick_envelope(raw: DataFrame, value_col: str = "value") -> DataFrame:
 
     PERMISSIVE parse with corrupt-record capture; the close-only tick
     variant is folded into the superset by coalescing close_price into
-    close. Malformed rows survive with `is_corrupt = true` so a DLQ
-    sink can route them (instead of the reference's silent nulls).
+    close. A row that is not a tick (malformed JSON, or no `symbol` or
+    `timestamp`, as for an empty line or a null value) keeps its raw
+    line in `_corrupt_record` ("" for a null value) so a DLQ sink can
+    route it; the column is null on every tick.
     """
+    value = F.col(value_col).cast("string")
     parsed = raw.select(
         F.from_json(
-            F.col(value_col).cast("string"),
-            TICK_SCHEMA,
-            {"columnNameOfCorruptRecord": "_corrupt_record"},
+            value, TICK_SCHEMA, {"columnNameOfCorruptRecord": "_corrupt_record"}
         ).alias("t"),
-        F.col(value_col).cast("string").alias("_raw"),
+        value.alias("_raw"),
+    )
+    not_a_tick = (
+        F.col("t._corrupt_record").isNotNull()
+        | F.col("t.symbol").isNull()
+        | F.col("t.timestamp").isNull()
     )
     return parsed.select(
         F.col("t.symbol").alias("symbol"),
@@ -75,8 +85,9 @@ def parse_tick_envelope(raw: DataFrame, value_col: str = "value") -> DataFrame:
         F.coalesce(F.col("t.close"), F.col("t.close_price")).alias("close"),
         F.col("t.volume").alias("volume"),
         F.coalesce(F.col("t.source"), F.lit("realtime")).alias("source"),
-        F.col("t._corrupt_record").isNotNull().alias("is_corrupt"),
-        F.col("_raw"),
+        F.when(not_a_tick, F.coalesce(F.col("_raw"), F.lit(""))).alias(
+            "_corrupt_record"
+        ),
     )
 
 
@@ -118,6 +129,24 @@ CDC_SCHEMA = StructType(
 )
 
 
+def fulldocument_to_ticks(docs: DataFrame) -> DataFrame:
+    """fullDocument rows (the connector's full-document-only output)
+    → canonical tick rows: symbol defaults 'UNKNOWN', source defaults
+    'unknown', ``time`` renames to ts (P7/P8; mongo_stream_etl.py:23-31).
+    The one projection of both CDC paths: ``parse_cdc_envelope`` and the
+    live connector (streaming/mongo_connector.py)."""
+    return docs.select(
+        F.coalesce(F.col("symbol"), F.lit("UNKNOWN")).alias("symbol"),
+        F.to_timestamp(F.col("time")).alias("ts"),
+        F.col("open"),
+        F.col("high"),
+        F.col("low"),
+        F.col("close"),
+        F.col("volume"),
+        F.coalesce(F.col("source"), F.lit("unknown")).alias("source"),
+    )
+
+
 def parse_cdc_envelope(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """Change-event JSON → routed tick rows (S6 + P6/P7/P8).
 
@@ -131,23 +160,14 @@ def parse_cdc_envelope(raw: DataFrame, value_col: str = "value") -> DataFrame:
       (P7; mongo_stream_etl.py:23-31 `.get()` defaults)
     - `time` renames to the canonical ts (P8; mongo_stream_etl.py:31)
     """
-    doc = F.col("e.fullDocument")
-    return (
+    docs = (
         raw.select(
             F.from_json(F.col(value_col).cast("string"), CDC_SCHEMA).alias("e")
         )
-        .where(doc.isNotNull())
-        .select(
-            F.coalesce(doc["symbol"], F.lit("UNKNOWN")).alias("symbol"),
-            F.to_timestamp(doc["time"]).alias("ts"),
-            doc["open"].alias("open"),
-            doc["high"].alias("high"),
-            doc["low"].alias("low"),
-            doc["close"].alias("close"),
-            doc["volume"].alias("volume"),
-            F.coalesce(doc["source"], F.lit("unknown")).alias("source"),
-        )
+        .where(F.col("e.fullDocument").isNotNull())
+        .select("e.fullDocument.*")
     )
+    return fulldocument_to_ticks(docs)
 
 
 def kafka_source_options(
@@ -235,6 +255,26 @@ def stop_all_streams(spark: SparkSession) -> int:
     for q in active:
         q.stop()
     return len(active)
+
+
+def start_foreach_batch(
+    stream: DataFrame,
+    write_batch: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    processing_time: str | None = None,
+) -> StreamingQuery:
+    """Start ``write_batch`` over ``stream`` as a checkpointed
+    foreachBatch query, triggered availableNow (drain the source, then
+    stop) unless ``processing_time`` is given. At-least-once: a batch
+    replayed after a crash runs ``write_batch`` again."""
+    writer = stream.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint
+    )
+    if processing_time is None:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
 
 
 def read_tick_file_stream(

@@ -78,6 +78,7 @@ from stock_trend_predictor_spark.operators.statestore import (
     commit_state,
     read_state_table,
 )
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 
 #: order-independent per-dimension accumulator type.
 SUM_DECIMAL = "decimal(38,12)"
@@ -189,9 +190,4 @@ def ivf_maintenance_sink(
             batch_id=batch_id,
         )
 
-    return (
-        vec_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(vec_stream, write_batch, checkpoint)

@@ -5,8 +5,9 @@ The reference produces JSON ticks row-at-a-time with a synchronous
 ``producer.send(topic, d).get(timeout=10)``) and an explicit
 ``flush()``. Spark-first, the whole producer becomes one declarative
 sink: ``to_json(struct(*))`` builds the identical wire bytes JVM-side,
-and the kafka sink writes partition-parallel with checkpointed
-exactly-once-per-batch semantics — no per-record ack, no driver loop.
+and the kafka sink writes partition-parallel from a checkpointed query
+— no per-record ack, no driver loop. It is at-least-once: a batch
+replayed after a crash is produced again, and consumers dedup.
 
 The encode step is pure batch-testable DataFrame code (see
 tests/test_streaming.py round-trip through ingest.parse_tick_envelope);

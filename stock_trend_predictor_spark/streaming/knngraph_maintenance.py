@@ -96,6 +96,7 @@ from stock_trend_predictor_spark.operators.statestore import (
     read_meta,
     read_state_table,
 )
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 from stock_trend_predictor_spark.streaming.neardup_maintenance import (
     PRUNE_MIN_BYTES,
     _state_bytes,
@@ -526,12 +527,7 @@ def knngraph_maintenance_sink(
             batch_id=batch_id,
         )
 
-    return (
-        vec_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(vec_stream, write_batch, checkpoint)
 
 
 def retrain_knngraph_state(

@@ -102,6 +102,7 @@ from stock_trend_predictor_spark.operators.statestore import (
     read_meta,
     read_state_table,
 )
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 from stock_trend_predictor_spark.streaming.neardup_maintenance import (
     PRUNE_MIN_BYTES,
 )
@@ -573,9 +574,4 @@ def manifest_maintenance_sink(
             decon_filter=decon_filter,
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(doc_stream, write_batch, checkpoint)

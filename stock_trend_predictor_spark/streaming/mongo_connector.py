@@ -8,8 +8,9 @@ history or realtime collection
 (streaming_processing/mongo_stream_etl.py:14-38;
 ml_model/predict_from_vm4.py:44-45 uses the same watch). This repo's engine-side semantics (P6 skip-no-document, P7
 symbol/source defaults, P8 time→ts rename, S6 routing) live in
-``streaming/ingest.py::parse_cdc_envelope`` and
-``streaming/routing.py`` and are fully tested against a modeled
+``streaming/ingest.py`` (``parse_cdc_envelope`` and the projection it
+shares with this module, ``fulldocument_to_ticks``) and
+``streaming/routing.py``, and are fully tested against a modeled
 envelope stream; what was missing is the OPTION SURFACE a user points
 at a real deployment.
 
@@ -30,9 +31,11 @@ divergence documented since round 1).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from stock_trend_predictor_spark.streaming.ingest import CDC_SCHEMA
+from stock_trend_predictor_spark.streaming.ingest import (
+    CDC_SCHEMA,
+    fulldocument_to_ticks,
+)
 
 #: the reference deployment's namespace (mongo_stream_etl.py:6-11)
 DEFAULT_DATABASE = "stock_db"
@@ -96,25 +99,6 @@ def mongo_write_options(
         opts["spark.mongodb.operationType"] = "update"
         opts["spark.mongodb.idFieldList"] = id_field
     return opts
-
-
-def fulldocument_to_ticks(docs: DataFrame) -> DataFrame:
-    """fullDocument rows (the connector's full-document-only output)
-    → canonical tick rows, with EXACTLY parse_cdc_envelope's field
-    semantics: symbol defaults 'UNKNOWN', source defaults 'unknown',
-    ``time`` renames to ts (P7/P8; mongo_stream_etl.py:23-31). Kept
-    as a standalone projection so the live connector path and the
-    modeled-envelope path share one tested contract."""
-    return docs.select(
-        F.coalesce(F.col("symbol"), F.lit("UNKNOWN")).alias("symbol"),
-        F.to_timestamp(F.col("time")).alias("ts"),
-        F.col("open"),
-        F.col("high"),
-        F.col("low"),
-        F.col("close"),
-        F.col("volume"),
-        F.coalesce(F.col("source"), F.lit("unknown")).alias("source"),
-    )
 
 
 def mongo_ticks_change_stream(

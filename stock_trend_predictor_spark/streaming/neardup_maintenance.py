@@ -121,6 +121,7 @@ from stock_trend_predictor_spark.operators.statestore import (
     read_meta,
     read_state_table,
 )
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 
 #: default on-disk hash-bucket count for the band index and shingle
 #: store. Scale with the corpus: P ~ total band rows / 100k keeps a
@@ -791,9 +792,4 @@ def neardup_maintenance_sink(
             batch_id=batch_id,
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(doc_stream, write_batch, checkpoint)

@@ -65,6 +65,7 @@ from stock_trend_predictor_spark.operators.statestore import (
     read_meta,
     read_state_table,
 )
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 from stock_trend_predictor_spark.streaming.neardup_maintenance import (
     PRUNE_MIN_BYTES,
     _band_bucket,
@@ -335,9 +336,4 @@ def phash_maintenance_sink(
             batch_id=batch_id,
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(doc_stream, write_batch, checkpoint)

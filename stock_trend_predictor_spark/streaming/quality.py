@@ -29,6 +29,7 @@ from stock_trend_predictor_spark.operators.statestore import (
     commit_state,
     read_state_table,
 )
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 
 #: (name, predicate-builder) — the event-stream subset of the batch
 #: audit's expectations (cross-table checks need the dimension tables
@@ -94,12 +95,7 @@ def quality_audit_sink(
             batch.sparkSession, batch, state_dir, batch_id=batch_id
         )
 
-    return (
-        event_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(event_stream, write_batch, checkpoint)
 
 
 def read_quality_totals(

@@ -62,6 +62,7 @@ from stock_trend_predictor_spark.operators.statestore import (
     read_meta,
     read_state_table,
 )
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 from stock_trend_predictor_spark.streaming.neardup_maintenance import (
     PRUNE_MIN_BYTES,
     _state_bytes,
@@ -367,9 +368,4 @@ def retrieval_maintenance_sink(
             batch.sparkSession, batch, state_dir, batch_id=batch_id
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(doc_stream, write_batch, checkpoint)

@@ -18,26 +18,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
+
 
 def route_by_source(
     ticks: DataFrame,
     history_path: str,
     realtime_path: str,
     checkpoint: str,
-    corrupt_path: str | None = None,
+    corrupt_path: str,
 ) -> StreamingQuery:
     """history/realtime/DLQ three-way split, one file per non-empty
     route per micro-batch.
 
-    The sinks are at-least-once: a replayed ``foreachBatch`` appends
-    its batch again (see ROADMAP's exactly-once item). Corrupt rows are
-    dropped when ``corrupt_path`` is None.
+    A row with a ``_corrupt_record`` goes to the DLQ as its raw line, in
+    a single ``_raw`` column. The sinks are at-least-once: a replayed
+    ``foreachBatch`` appends its batch again (see ROADMAP's exactly-once
+    item).
     """
-    sinks = {"history": history_path, "realtime": realtime_path}
-    if corrupt_path is not None:
-        sinks["dlq"] = corrupt_path
+    sinks = {"history": history_path, "realtime": realtime_path, "dlq": corrupt_path}
     route = (
-        F.when(F.col("is_corrupt"), "dlq")
+        F.when(F.col("_corrupt_record").isNotNull(), "dlq")
         .when(F.col("source") == "history", "history")
         .otherwise("realtime")
     )
@@ -53,16 +54,11 @@ def route_by_source(
                     continue
                 rows = batch.where(route == name)
                 if name == "dlq":
-                    rows = rows.select("_raw")
+                    rows = rows.select(F.col("_corrupt_record").alias("_raw"))
                 else:
-                    rows = rows.drop("is_corrupt", "_raw")
+                    rows = rows.drop("_corrupt_record")
                 rows.coalesce(1).write.mode("append").parquet(path)
         finally:
             batch.unpersist()
 
-    return (
-        ticks.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(ticks, write_batch, checkpoint)

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from stock_trend_predictor_spark.ml.pergroup import score_with_models
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 
 
 def streaming_score(
@@ -29,8 +30,7 @@ def streaming_score(
     ``models`` is a static DataFrame (train once, broadcast each
     batch); ticks whose symbol has no model drop out in the join —
     the reference's model-known-key filter (P10). Returns the started
-    StreamingQuery (availableNow: drain whatever is in the source,
-    then stop — swap for a processingTime trigger in production).
+    StreamingQuery (availableNow: drain the source, then stop).
     """
 
     def score_batch(batch: DataFrame, _batch_id: int) -> None:
@@ -39,9 +39,4 @@ def streaming_score(
         )
         scored.coalesce(1).write.mode("append").parquet(out_path)
 
-    return (
-        ticks_stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(ticks_stream, score_batch, checkpoint)

@@ -82,6 +82,7 @@ from stock_trend_predictor_spark.operators.statestore import (
     read_meta,
     read_state_table,
 )
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 from stock_trend_predictor_spark.streaming.knngraph_maintenance import (
     _cid_bucket,
     _scored_new_vs_all,
@@ -416,9 +417,4 @@ def semdedup_maintenance_sink(
             batch_id=batch_id,
         )
 
-    return (
-        vec_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(vec_stream, write_batch, checkpoint)

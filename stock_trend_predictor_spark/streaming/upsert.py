@@ -31,6 +31,8 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 from pyspark.sql.window import Window
 
+from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
+
 BUCKET_COL = "_bucket"
 
 
@@ -113,9 +115,9 @@ def upsert_sink(
 ) -> StreamingQuery:
     """Streaming upsert: each micro-batch merges into the keyed table.
 
-    Checkpointed foreachBatch gives exactly-once per batch id, and the
-    merge itself is idempotent under batch replay (new-beats-old tie
-    rule), so crash/restart between commit and checkpoint is safe.
+    foreachBatch is at-least-once, and the merge is idempotent under
+    replay (new-beats-old tie rule), so a batch replayed after a crash
+    leaves the table as one run of it would.
 
     Default trigger is availableNow (drain-and-stop, right for
     replayable file/table sources); pass `processing_time` for
@@ -128,11 +130,4 @@ def upsert_sink(
             batch.sparkSession, batch, target_dir, key, order_col, n_buckets
         )
 
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, write_batch, checkpoint, processing_time)

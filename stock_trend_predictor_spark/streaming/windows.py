@@ -102,54 +102,6 @@ HWM_SCHEMA = StructType(
 _HWM_STATE_SCHEMA = StructType([StructField("max_ts_micros", LongType())])
 
 
-def incremental_new_ticks_tws(ticks: DataFrame) -> DataFrame:
-    """The same per-key high-watermark operator on Spark 4's
-    transformWithStateInPandas API (the successor to
-    applyInPandasWithState): explicit named ValueState, per-batch
-    Arrow iteration, RocksDB-backed. Kept alongside the
-    applyInPandasWithState form below — same semantics, newer engine
-    surface. Runtime requirement: the TWS state-server protocol needs
-    google.protobuf (absent in the build container, so the test skips
-    there; the query construction itself is dependency-free)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class HighWatermark(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._wm = handle.getValueState("wm", _HWM_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (symbol,) = key
-            wm = self._wm.get()[0] if self._wm.exists() else -1
-            for pdf in rows:
-                pdf = pdf.sort_values("ts")
-                micros = pdf["ts"].astype("int64") // 1000
-                fresh = pdf[micros > wm]
-                if len(fresh) > 0:
-                    wm = int(micros.max())
-                    self._wm.update((wm,))
-                    out = fresh[["ts", "close"]].copy()
-                    out.insert(0, "symbol", symbol)
-                    out["n_new"] = len(fresh)
-                    yield out
-
-        def close(self) -> None:
-            pass
-
-    return (
-        ticks.select("symbol", "ts", "close")
-        .groupBy("symbol")
-        .transformWithStateInPandas(
-            HighWatermark(),
-            outputStructType=HWM_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
 def incremental_new_ticks(ticks: DataFrame) -> DataFrame:
     """Faithful streaming form of the reference's per-symbol
     high-watermark dedup (fetch_stock.py:43,57,64): emit only rows

@@ -70,7 +70,7 @@ def test_kafka_wire_roundtrip(spark):
         for r in ticks.collect()
     }
     assert got == want
-    assert parsed.where(F.col("is_corrupt")).count() == 0
+    assert parsed.where(F.col("_corrupt_record").isNotNull()).count() == 0
 
 
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):

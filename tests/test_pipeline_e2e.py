@@ -53,7 +53,7 @@ def test_full_streaming_pipeline(spark, tmp_path):
 
     out = str(tmp_path / "bars")
     parsed = read_tick_file_stream(spark, str(src), max_files_per_trigger=1)
-    good = parsed.where(~F.col("is_corrupt"))
+    good = parsed.where(F.col("_corrupt_record").isNull())
     # dedup_ticks already set the watermark; the window inherits it
     bars = windowed_ohlc(
         dedup_ticks(good), bucket="5 minutes", watermark_delay=None

@@ -117,3 +117,20 @@ def test_cited_files_exist():
             if not ok:
                 bad.append((str(src.relative_to(pkg)), cite))
     assert not bad, f"citations of nonexistent files: {bad}"
+
+
+def test_one_module_starts_foreach_batch_queries():
+    """Every foreachBatch sink the package starts goes through
+    ``streaming/ingest.py::start_foreach_batch``, so the trigger policy
+    (availableNow, or processingTime when a caller passes one) lives in
+    one place. A source scan: a second ``.foreachBatch(`` call site or
+    ``trigger(availableNow=True)`` anywhere else fails it."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "stock_trend_predictor_spark"
+    sources = {
+        str(p.relative_to(pkg)): p.read_text() for p in sorted(pkg.rglob("*.py"))
+    }
+    for needle in (".foreachBatch(", "trigger(availableNow=True)"):
+        found = [name for name, text in sources.items() if needle in text]
+        assert found == ["streaming/ingest.py"], (needle, found)

@@ -10,7 +10,6 @@ import json
 import os
 import time
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -22,7 +21,6 @@ from stock_trend_predictor_spark.streaming.ingest import (
 from stock_trend_predictor_spark.streaming.routing import route_by_source
 from stock_trend_predictor_spark.streaming.windows import (
     incremental_new_ticks,
-    incremental_new_ticks_tws,
     session_activity,
     sliding_volume,
     windowed_ohlc,
@@ -205,67 +203,9 @@ def test_envelope_parse_superset_and_corrupt(spark, tmp_path):
     assert close_only["close"] == 11.5
     assert close_only["source"] == "realtime"
     # corrupt row captured, not silently dropped
-    corrupt = [r for r in parsed.collect() if r["is_corrupt"]]
+    corrupt = [r for r in parsed.collect() if r["_corrupt_record"] is not None]
     assert len(corrupt) == 1 and corrupt[0]["symbol"] is None
-
-
-def test_tws_plan_constructs_without_protobuf(spark):
-    """The transformWithStateInPandas RUNTIME needs google.protobuf
-    (absent here), but plan construction must stay dependency-free so
-    the gated path can't rot: build the streaming plan end-to-end and
-    assert its output schema — green in every environment."""
-    src = (
-        spark.readStream.format("rate")
-        .load()
-        .selectExpr(
-            "'A' AS symbol", "timestamp AS ts", "cast(value AS double) AS close"
-        )
-    )
-    out = incremental_new_ticks_tws(src)
-    assert out.isStreaming
-    assert out.schema.simpleString() == (
-        "struct<symbol:string,ts:timestamp,close:double,n_new:bigint>"
-    )
-
-
-def test_incremental_new_ticks_transform_with_state(spark, tmp_path):
-    """Same high-watermark semantics on the transformWithStateInPandas
-    API (RocksDB-backed named ValueState). The API's state-server
-    protocol needs protobuf, which this container lacks — skip there
-    (the applyInPandasWithState twin above covers the semantics)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    src = tmp_path / "in"
-    src.mkdir()
-    _write_jsonl(src / "batch0.jsonl", [
-        {"timestamp": "2024-01-01 09:30:00", "symbol": "AAPL", "close": 10.0},
-        {"timestamp": "2024-01-01 09:31:00", "symbol": "AAPL", "close": 11.0},
-    ])
-    _write_jsonl(src / "batch1.jsonl", [
-        {"timestamp": "2024-01-01 09:31:00", "symbol": "AAPL", "close": 11.0},
-        {"timestamp": "2024-01-01 09:32:00", "symbol": "AAPL", "close": 12.0},
-    ])
-    now = time.time()
-    os.utime(src / "batch0.jsonl", (now - 60, now - 60))
-    os.utime(src / "batch1.jsonl", (now, now))
-
-    stream = incremental_new_ticks_tws(
-        read_tick_file_stream(spark, str(src), max_files_per_trigger=1)
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("tws_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    out = sorted(
-        spark.sql("SELECT ts, close FROM tws_test").collect(),
-        key=lambda r: r["ts"],
-    )
-    assert [r["close"] for r in out] == [10.0, 11.0, 12.0]
-    spark.catalog.dropTempView("tws_test")
+    assert corrupt[0]["_corrupt_record"] == MALFORMED
 
 
 def test_update_mode_reemits_changed_windows(spark, tmp_path):
@@ -428,7 +368,9 @@ def test_streaming_dedup_idempotent(spark, tmp_path):
 def test_route_by_source_split_is_partition(spark, tmp_path):
     src = tmp_path / "in"
     src.mkdir()
-    _write_jsonl(src / "batch0.jsonl", TICKS, extra_raw=[MALFORMED])
+    # valid JSON with no timestamp: no dedup key, so not a tick
+    keyless = '{"symbol": "AAPL", "close": 1.0}'
+    _write_jsonl(src / "batch0.jsonl", TICKS, extra_raw=[MALFORMED, keyless])
     hist, rt, dlq = (str(tmp_path / d) for d in ("hist", "rt", "dlq"))
 
     stream = read_tick_file_stream(spark, str(src))
@@ -440,10 +382,11 @@ def test_route_by_source_split_is_partition(spark, tmp_path):
     hist_rows = spark.read.parquet(hist).collect()
     rt_rows = spark.read.parquet(rt).collect()
     dlq_rows = spark.read.parquet(dlq).collect()
-    # disjoint split: 2 history copies (dup not deduped here), 2 realtime, 1 DLQ
+    # disjoint split: 2 history copies (dup not deduped here), 2 realtime,
+    # 2 DLQ (the malformed and the keyless line)
     assert len(hist_rows) == 2
     assert len(rt_rows) == 2
-    assert len(dlq_rows) == 1
+    assert sorted(r["_raw"] for r in dlq_rows) == sorted([MALFORMED, keyless])
     assert all(r["source"] == "history" for r in hist_rows)
     assert all(r["source"] != "history" for r in rt_rows)
 
@@ -584,11 +527,12 @@ def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
     src = tmp_path / "in"
     src.mkdir()
     _write_jsonl(src / "batch0.jsonl", TICKS[:2])
-    hist, rt = str(tmp_path / "hist"), str(tmp_path / "rt")
+    hist, rt, dlq = (str(tmp_path / d) for d in ("hist", "rt", "dlq"))
     ckpt = str(tmp_path / "ckpt")
 
     q = route_by_source(
-        read_tick_file_stream(spark, str(src)), hist, rt, checkpoint=ckpt
+        read_tick_file_stream(spark, str(src)), hist, rt, checkpoint=ckpt,
+        corrupt_path=dlq,
     )
     q.awaitTermination(120)
     n_first = spark.read.parquet(rt).count()
@@ -599,7 +543,8 @@ def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
          "close_price": 21.0},
     ])
     q2 = route_by_source(
-        read_tick_file_stream(spark, str(src)), hist, rt, checkpoint=ckpt
+        read_tick_file_stream(spark, str(src)), hist, rt, checkpoint=ckpt,
+        corrupt_path=dlq,
     )
     q2.awaitTermination(120)
 
