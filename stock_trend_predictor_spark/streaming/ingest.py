@@ -257,6 +257,9 @@ def stop_all_streams(spark: SparkSession) -> int:
     return len(active)
 
 
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
 def start_foreach_batch(
     stream: DataFrame,
     write_batch: Callable[[DataFrame, int], None],
@@ -266,7 +269,24 @@ def start_foreach_batch(
     """Start ``write_batch`` over ``stream`` as a checkpointed
     foreachBatch query, triggered availableNow (drain the source, then
     stop) unless ``processing_time`` is given. At-least-once: a batch
-    replayed after a crash runs ``write_batch`` again."""
+    replayed after a crash runs ``write_batch`` again.
+
+    The query runs only micro-batches that have input rows: Spark's
+    watermark-only (no-data) batch is turned off for it, and for it
+    alone. The setting is applied to the session just for ``start()``,
+    where the query takes its own copy of the session's conf, and the
+    caller's value is restored after.
+
+    This is safe for ``dropDuplicates`` (``dedup_ticks``): each data
+    batch filters late rows with the watermark the previous data batch
+    committed, with or without a no-data batch between them, so the
+    output is the same. Only eviction moves: keys behind the watermark
+    are evicted by the next data batch instead of an empty one, so state
+    stays bounded. A stream whose output the watermark releases, such
+    as a windowed aggregation in append mode, must not be started here:
+    its last windows would wait for the next batch with data, so an
+    availableNow query would stop without emitting them.
+    """
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint
     )
@@ -274,7 +294,16 @@ def start_foreach_batch(
         writer = writer.trigger(availableNow=True)
     else:
         writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    conf = stream.sparkSession.conf
+    prior = conf.get(_NO_DATA_BATCHES, None)
+    conf.set(_NO_DATA_BATCHES, "false")
+    try:
+        return writer.start()
+    finally:
+        if prior is None:
+            conf.unset(_NO_DATA_BATCHES)
+        else:
+            conf.set(_NO_DATA_BATCHES, prior)
 
 
 def read_tick_file_stream(

@@ -8,8 +8,9 @@ set-oriented foreachBatch writes.
 Scale notes: each micro-batch is persisted and counted per route. That
 count runs the stateful dedup upstream on all its shuffle partitions in
 parallel and fills the cache. Each route that has rows is then written
-from the cache as one file; an empty route, such as the watermark's
-no-data batch, starts no write job and leaves no file.
+from the cache as one file; an empty route starts no write job and
+leaves no file. The query runs no watermark-only batch (see
+`start_foreach_batch`), so every batch reads input rows.
 """
 
 from __future__ import annotations

@@ -400,7 +400,10 @@ def _parquet_parts(path):
 def test_route_by_source_one_file_per_route_per_batch(spark, tmp_path):
     """Each sink gains one file per micro-batch in which its route had
     rows, however many shuffle partitions the dedup spread the batch
-    over; an empty route and the watermark's no-data batch add none."""
+    over; an empty route adds none. The router runs no watermark-only
+    batch: the next data batch evicts the keys behind the watermark, and
+    the session's setting is left as the caller had it."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
     src = tmp_path / "in"
     src.mkdir()
     symbols = [f"S{i:02d}" for i in range(16)]
@@ -411,8 +414,8 @@ def test_route_by_source_one_file_per_route_per_batch(spark, tmp_path):
          "open": 1.0, "close": 1.0, "source": source}
         for s in symbols for m, source in enumerate(("history", "realtime"))
     ], extra_raw=[MALFORMED])
-    # batch 1: realtime only, an hour later; the watermark passes every
-    # batch-0 key, so a no-data batch follows to evict them
+    # batch 1: realtime only, an hour later; it moves the watermark past
+    # every batch-0 key, which a no-data batch would then evict
     _write_jsonl(src / "b1.jsonl", [
         {"timestamp": "2024-01-01 10:45:00", "symbol": s, "close": 2.0,
          "source": "realtime"}
@@ -423,15 +426,18 @@ def test_route_by_source_one_file_per_route_per_batch(spark, tmp_path):
     os.utime(src / "b1.jsonl", (now, now))
     hist, rt, dlq = (str(tmp_path / d) for d in ("hist", "rt", "dlq"))
 
-    q = route_by_source(
-        dedup_ticks(read_tick_file_stream(spark, str(src), max_files_per_trigger=1)),
-        hist, rt, checkpoint=str(tmp_path / "ckpt"), corrupt_path=dlq,
-    )
-    q.awaitTermination(180)
+    def route():
+        before = spark.conf.get(key, None)
+        q = route_by_source(
+            dedup_ticks(read_tick_file_stream(spark, str(src), max_files_per_trigger=1)),
+            hist, rt, checkpoint=str(tmp_path / "ckpt"), corrupt_path=dlq,
+        )
+        assert spark.conf.get(key, None) == before
+        q.awaitTermination(180)
+        return q.recentProgress
 
-    inputs = [p["numInputRows"] for p in q.recentProgress]
-    assert [n for n in inputs if n] == [33, 16]
-    assert inputs[-1] == 0  # the watermark's no-data batch ran last
+    inputs = [p["numInputRows"] for p in route()]
+    assert inputs == [33, 16]  # no no-data batch ran
     assert len(_parquet_parts(hist)) == 1
     assert len(_parquet_parts(rt)) == 2
     assert len(_parquet_parts(dlq)) == 1
@@ -440,6 +446,29 @@ def test_route_by_source_one_file_per_route_per_batch(spark, tmp_path):
     assert len(hist_rows) == 16 and all(r["source"] == "history" for r in hist_rows)
     assert len(rt_rows) == 32 and all(r["source"] != "history" for r in rt_rows)
     assert spark.read.parquet(dlq).collect()[0]["_raw"] == MALFORMED
+
+    # batch 2, a second round on the same checkpoint, with the session
+    # setting Spark's default explicitly: the query still runs one batch
+    _write_jsonl(src / "b2.jsonl", [
+        {"timestamp": "2024-01-01 10:50:00", "symbol": s, "close": 3.0,
+         "source": "realtime"}
+        for s in symbols[:4]
+    ])
+    spark.conf.set(key, "true")
+    try:
+        (progress,) = route()
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.unset(key)
+    # it runs with batch 1's watermark (10:35) and evicts the 32 batch-0
+    # ticks; the 16 batch-1 keys, the 4 new ones and the bad line's
+    # null key remain
+    (state,) = progress["stateOperators"]
+    assert progress["numInputRows"] == 4
+    assert state["numRowsRemoved"] == 32
+    assert state["numRowsTotal"] == 16 + 4 + 1
+    assert len(_parquet_parts(rt)) == 3
+    assert spark.read.parquet(rt).count() == 36
 
 
 def test_windowed_ohlc_bars(spark, tmp_path):

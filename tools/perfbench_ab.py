@@ -4,9 +4,10 @@ Runs ``perfbench/run.py`` (end-to-end metrics, tracing off) in a parent
 checkout and a change checkout, one pair per seed, swapping which side
 runs first every pair. For each end-to-end metric of ``BENCHMARK.json``
 it prints each side's median and quartiles, the change's wins out of
-the pairs (ties count for neither) and whether the medians differ by
-more than the parent's interquartile range; then the ``failed`` count
-of each run, by seed.
+the pairs (ties count for neither), whether the medians differ by more
+than the parent's interquartile range, and the change's median ratio
+against the metric's ``bound``; then the ``failed`` count of each run,
+by seed.
 
 Usage (from the repository root):
 
@@ -52,11 +53,18 @@ def quartiles(values: list[float]) -> tuple[float, ...]:
 
 
 def summary(metrics: list[dict], runs: dict[str, list[dict]]) -> list[str]:
-    """One line per end-to-end metric, then the failed counts."""
+    """One line per end-to-end metric, then the failed counts.
+
+    Each metric line ends with the change's median as a ratio of the
+    parent's, against the metric's ``bound``: "within bound", "worse
+    than bound", or "unresolved" when the parent's own IQR/median is
+    wider than the bound and not every change run beats every parent
+    run.
+    """
     n = len(runs["parent"])
     out = []
     for m in metrics:
-        name, lower = m["name"], m["better"] == "lower"
+        name, lower, bound = m["name"], m["better"] == "lower", m["bound"]
         vals = {
             side: [r["metrics"][name]["value"] for r in rs] for side, rs in runs.items()
         }
@@ -69,11 +77,24 @@ def summary(metrics: list[dict], runs: dict[str, list[dict]]) -> list[str]:
         delta = c50 - p50
         better = delta < 0 if lower else delta > 0
         gain = wins * 10 >= n * 9 and better and abs(delta) > p75 - p25
+        spread = (p75 - p25) / p50
+        worse_by = (delta if lower else -delta) / p50
+        all_better = (
+            max(vals["change"]) < min(vals["parent"]) if lower
+            else min(vals["change"]) > max(vals["parent"])
+        )
+        if spread > bound and not all_better:
+            verdict = f"unresolved (parent IQR/median {spread:.3f})"
+        elif worse_by > bound:
+            verdict = "worse than bound"
+        else:
+            verdict = "within bound"
         out.append(
             f"{name} ({m['unit']}): parent {p50:.4g} [{p25:.4g}, {p75:.4g}],"
             f" change {c50:.4g} [{c25:.4g}, {c75:.4g}], median"
             f" {delta / p50:+.1%}; change wins {wins}/{n}; parent IQR"
-            f" {p75 - p25:.4g}; gain claimable: {'yes' if gain else 'no'}"
+            f" {p75 - p25:.4g}; gain claimable: {'yes' if gain else 'no'};"
+            f" median ratio {c50 / p50:.3f}, bound {bound:g}: {verdict}"
         )
     for side, rs in runs.items():
         out.append(
