@@ -26,8 +26,6 @@ iterations in operators/ivf.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -140,12 +138,8 @@ def connected_components(
     # Simulated on diameter-60/200 chains: max_k=2 converges in 12-14
     # total rounds (~26-30 jobs) vs 24 rounds (~36 jobs) at the old
     # max_k=8 — and the total is diameter-independent either way
-    # (O(log d) batches). Tune via SPARK_GRAFT_CC_MAX_ROUNDS_PER_SYNC
-    # (1 restores the probe-every-round loop; the fixpoint is
-    # identical at any value).
-    _max_k = max(
-        1, int(os.environ.get("SPARK_GRAFT_CC_MAX_ROUNDS_PER_SYNC", "2"))
-    )
+    # (O(log d) batches). The fixpoint is identical at any cap.
+    _max_k = 2
     rounds_done = 0
     next_k = 1
     first_batch = True

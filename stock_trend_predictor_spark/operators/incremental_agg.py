@@ -16,23 +16,27 @@ approximately equal (law proven through the driver's oracle gate by
 plans/analytics_queries.py::daily_rollup_incremental, and by
 tests/test_incremental.py under arbitrary batch splits).
 
-Persistence uses the same bucketed dynamic-partition-overwrite pattern
-as streaming/upsert.py, partitioned by day: a batch only rewrites the
-days it touches. The merge is additive, not idempotent, and foreachBatch
-is at-least-once: ``update_rollup_state`` takes no batch id, so a batch
-replayed after a crash is merged twice (ROADMAP's exactly-once item).
+Persistence is operators/statestore.py's commit: each batch's partials
+are one append segment of the ``partials`` table, and the merge runs
+at read time over the committed segments. A batch writes only its own
+partials and never rewrites a committed day. The commit records the
+batch id, so a batch that foreachBatch replays after a crash is
+skipped before anything is written. Read cost grows with the number
+of segments; ``statestore.compact_append_table(spark, state_dir,
+"partials")`` folds them into one.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from stock_trend_predictor_spark.functions.exact import DECIMAL_T
+from stock_trend_predictor_spark.operators.statestore import (
+    commit_state,
+    read_state_table,
+)
 from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
-
-STATE_COLS = ("n", "sum_v", "min_v", "max_v")
 
 
 def daily_partials(
@@ -41,8 +45,6 @@ def daily_partials(
     """Mergeable per-(key, day) partial state for one input slice."""
     return df.groupBy(
         F.col(key).alias("key"),
-        # DATE (not timestamp) so the day partition directory name
-        # round-trips through partition-column type inference
         F.date_trunc("day", ts).cast("date").alias("day"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
@@ -88,30 +90,23 @@ def update_rollup_state(
     key: str,
     ts: str = "ts",
     value: str = "value",
+    batch_id: int | None = None,
 ) -> None:
-    """Merge one batch's partials into the persisted state table,
-    rewriting only the day partitions the batch touches."""
-    new = daily_partials(batch, key, ts, value)
-    days = [r[0] for r in new.select("day").distinct().collect()]
-    if not days:
-        return
-    try:
-        old = spark.read.parquet(state_dir).where(F.col("day").isin(days))
-        merged = merge_partials(old, new)
-    except AnalysisException:
-        merged = new
-    merged = merged.localCheckpoint(eager=True)  # break read-own-target
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("day").parquet(state_dir)
-    finally:
-        spark.conf.set(mode_key, prev)
+    """Commit one batch's partials as an append segment of the state
+    table; a ``batch_id`` already committed is skipped."""
+    commit_state(
+        state_dir,
+        {},
+        batch_id=batch_id,
+        appends={"partials": daily_partials(batch, key, ts, value)},
+    )
 
 
-def read_rollup(spark: SparkSession, state_dir: str) -> DataFrame:
-    return finalize(spark.read.parquet(state_dir))
+def read_rollup(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """The finalized rollup of every committed batch, or None before
+    the first commit."""
+    partials = read_state_table(spark, state_dir, "partials")
+    return None if partials is None else finalize(merge_partials(partials))
 
 
 def rollup_sink(
@@ -122,14 +117,13 @@ def rollup_sink(
     ts: str = "ts",
     value: str = "value",
 ):
-    """Streaming materialized view: each micro-batch's partials merge
-    into the persisted rollup state. At-least-once: unlike the upsert
-    sink, a batch that foreachBatch replays after a crash is merged
-    again, and its partials are counted twice."""
+    """Streaming materialized view: each micro-batch's partials are
+    committed to the rollup state under its batch id, so a batch that
+    foreachBatch replays after a crash is skipped, not counted twice."""
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         update_rollup_state(
-            batch.sparkSession, batch, state_dir, key, ts, value
+            batch.sparkSession, batch, state_dir, key, ts, value, batch_id
         )
 
     return start_foreach_batch(stream, write_batch, checkpoint)

@@ -565,8 +565,7 @@ def assign_clusters_two_level_multiprobe(
 #: when armed on AVERAGE cells (152.8 s capped@1000 vs 139.8 s plain
 #: on the dup-saturated corpus, whose max cell is only ~1.5x the
 #: average — no skew to flatten, pure insurance cost). Identity is
-#: law-tested at any cap; env-overridable (KNN_GRAPH_CELL_CAP) for
-#: A/B measurement.
+#: law-tested at any cap; read at call time, so a test can patch it.
 CELL_CAP = 3000
 
 
@@ -601,13 +600,7 @@ def cell_knn_pairs(
     neighbor_id) and mirrors into both orientations: multiplication
     commutes and the fold order over dimensions is shared, so the
     mirrored sim is bit-identical to scoring the reversed pair."""
-    import os
-
-    cap = (
-        int(os.environ.get("KNN_GRAPH_CELL_CAP", CELL_CAP))
-        if cell_cap is None
-        else int(cell_cap)
-    )
+    cap = CELL_CAP if cell_cap is None else int(cell_cap)
     # probed feeds three consumers (counts, query side, neighbor
     # side); materialize once so the multiprobe assignment compute
     # never re-runs

@@ -261,18 +261,14 @@ def _run_writes(
     writes: list[tuple[DataFrame, str, list[str] | None]],
     files_per_table: int,
 ) -> None:
-    """Execute independent table writes, OVERLAPPED when there is
-    more than one (each write is its own Spark job against its own
-    directory; the driver submits them from a small thread pool so a
-    later job's tasks back-fill executors idled by an earlier job's
+    """Execute independent table writes: a single write runs inline,
+    and more than one OVERLAP (each write is its own Spark job against
+    its own directory, submitted from a small thread pool so a later
+    job's tasks back-fill executors idled by an earlier job's
     straggler tail, instead of paying N sequential write walls per
-    commit). Semantically identical to the sequential loop: all
-    writes complete — or the first failure propagates — before the
-    caller swaps META, so a half-written dir is never referenced.
-    ``SPARK_GRAFT_COMMIT_OVERLAP=0`` restores the sequential loop
-    (same writes, same order-independence — an A/B and escape hatch
-    for deployments where concurrent jobs hurt, e.g. a saturated
-    dynamic-allocation cluster)."""
+    commit). All writes complete — or the first failure propagates —
+    before the caller swaps META, so a half-written dir is never
+    referenced."""
     def _labeled(df: DataFrame, path: str, pcols) -> None:
         from stock_trend_predictor_spark.operators.checkpoints import (
             job_phase,
@@ -284,10 +280,7 @@ def _run_writes(
         with job_phase(df.sparkSession, f"commit:{tag}"):
             _write_segment(df, path, pcols, files_per_table)
 
-    if (
-        os.environ.get("SPARK_GRAFT_COMMIT_OVERLAP", "1") == "0"
-        or len(writes) <= 1
-    ):
+    if len(writes) <= 1:
         for df, path, pcols in writes:
             _labeled(df, path, pcols)
         return

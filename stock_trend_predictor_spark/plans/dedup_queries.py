@@ -21,6 +21,11 @@ from stock_trend_predictor_spark.functions.text import (
 from stock_trend_predictor_spark.operators import dedup as D
 from stock_trend_predictor_spark.sources.tables import load_table, materialize_once
 
+#: smallest IVF cell count at which semdedup_keep_decision blocks with
+#: two-level multiprobe instead of the flat one (measured crossover at
+#: the query's blocking comment).
+SEMDEDUP_TWO_LEVEL_MIN_K = 64
+
 # --- DuckDB replay of the IVF coarse quantizer (round 6) -------------
 #
 # kmeans_centroids became cross-engine DETERMINISTIC in round 6: cell
@@ -1297,13 +1302,9 @@ def _register_r5b():
         # tests/test_similarity.py) is the stated useful regime for
         # candidate generation; the keeper laws are structural and
         # hold under either assignment (tests/test_round7.py).
-        # Env-overridable for A/B measurement.
         import os as _os
 
-        tl_min_k = int(
-            _os.environ.get("SEMDEDUP_TWO_LEVEL_MIN_K", "64")
-        )
-        two_level = k >= tl_min_k
+        two_level = k >= SEMDEDUP_TWO_LEVEL_MIN_K
         # ORACLE REGIME GATE (r6 advice): _SEMDEDUP_ORACLE replays
         # Lloyd UNSAMPLED with FLAT multiprobe blocking, so the
         # value-hash compare is only valid while sample_mod == 1 AND
@@ -1753,7 +1754,7 @@ FROM ranked WHERE rank <= 5
         "never corpus-bounded) with a MEGA-CELL GUARD (r7 verdict "
         "#1): a viral near-dup cluster packs its replicas into one "
         "cell, making the plain equi-join quadratic in ONE hash "
-        "bucket — so cells over KNN_GRAPH_CELL_CAP split into "
+        "bucket — so cells over operators/ivf.CELL_CAP split into "
         "ceil(n/cap) deterministic neighbor-splits and the query "
         "side replicates per split (lsh_candidate_pairs' "
         "degenerate-cell discipline: ordinary cells take the "

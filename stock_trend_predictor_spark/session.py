@@ -1,46 +1,32 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with the engine's defaults.
 
 The reference sets exactly one knob (``spark.sql.shuffle.partitions=2``,
 reference streaming_processing/features_engineering.py:19) on a plan that
-has no shuffle. Here we centralize a configuration that is meant to hold
-from local[32] tests up to a 1000-executor cluster:
+has no shuffle. ``SCALE_CONF`` holds only settings that change behaviour
+from Spark's defaults:
 
-- AQE on (runtime partition coalescing, skew-join splitting, dynamic
-  join-strategy switch) so the same declarative plan adapts at any SF;
+- session timezone pinned to UTC so timestamp semantics match the
+  DuckDB oracle and are cluster-node independent;
 - Arrow on for every Pandas-UDF boundary (the only sanctioned Python
   hot path);
-- session timezone pinned to UTC so timestamp semantics match the
-  DuckDB oracle and are cluster-node independent.
+- a 64 MiB broadcast-join threshold, so dimension tables broadcast.
+
+Adaptive execution, parquet filter pushdown and 128 MiB input splits
+are Spark's defaults and are not restated.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-#: Defaults chosen for scale-out behavior, not just local runs.
+#: Settings that differ from Spark's defaults.
 SCALE_CONF: dict[str, str] = {
-    # Adaptive execution: re-plan with runtime statistics. At 100 TB this
-    # is what turns a static 'shuffle.partitions' guess into right-sized
-    # partitions and splits skewed join partitions automatically.
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.adaptive.localShuffleReader.enabled": "true",
     # Deterministic timestamp semantics (matches DuckDB's naive ts).
     "spark.sql.session.timeZone": "UTC",
     # Arrow for pandas_udf / applyInPandas / toPandas boundaries.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Broadcast small dimension tables (region/nation/supplier-sized).
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # Columnar scan hygiene — filter pushdown is on by default in
-    # Spark, pinned explicitly because the engine's scale story depends
-    # on it. (aggregatePushdown is also set but only takes effect under
-    # the v2 parquet reader; the default v1 path ignores it.)
-    "spark.sql.parquet.filterPushdown": "true",
-    "spark.sql.parquet.aggregatePushdown": "true",
-    # Input split sizing: 128 MiB splits keep scan tasks uniform whether
-    # the input is 600 MB or 100 TB.
-    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
 }
 
 

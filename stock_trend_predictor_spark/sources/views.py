@@ -13,24 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from stock_trend_predictor_spark.sources.tables import load_table
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from stock_trend_predictor_spark.sources.tables import TABLE_NAMES, load_table
 
 
 def register_views(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
+    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLE_NAMES
 ) -> None:
     """Create/replace one temp view per table, named as in the oracle
     schema, so ``spark.sql`` text is portable between this engine and

@@ -318,20 +318,3 @@ def read_tick_file_stream(
     )
     raw = reader.load(path).select(F.col("value").cast("binary").alias("value"))
     return parse_tick_envelope(raw)
-
-
-def dedup_ticks_fuzzy(
-    ticks: DataFrame, watermark_delay: str = "10 minutes"
-) -> DataFrame:
-    """Dedup for re-transmissions whose event time JITTERS: the same
-    business event (symbol, close) re-delivered with a slightly
-    different timestamp is one tick. `dropDuplicates` would keep both
-    (the key tuple differs); `dropDuplicatesWithinWatermark` dedups on
-    the business key alone while still evicting state once the
-    watermark guarantees no more replays of that key can arrive —
-    bounded state without requiring exact-timestamp replays (the
-    at-least-once producer in the reference retransmits with fresh
-    wall-clock stamps, so this is the semantically correct guard)."""
-    return ticks.withWatermark(
-        "ts", watermark_delay
-    ).dropDuplicatesWithinWatermark(["symbol", "close"])

@@ -90,6 +90,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stock_trend_predictor_spark.operators.ivf import CELL_CAP
 from stock_trend_predictor_spark.operators.similarity import dot
 from stock_trend_predictor_spark.operators.statestore import (
     commit_state,
@@ -111,11 +112,6 @@ N_GRAPH_BUCKETS = 64
 
 #: neighbors kept per vector — knn_graph_ivf's k.
 TOP_K = 5
-
-#: mega-cell split threshold for the per-batch scoring join (see
-#: operators/ivf.CELL_CAP for the rationale — 2x the
-#: multiprobe-effective design cell, measured; identical default).
-CELL_CAP = 3000
 
 #: on-disk layout version, stamped in META's app dict on every
 #: commit (the neardup/decon fold discipline: refuse a mismatched

@@ -77,6 +77,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stock_trend_predictor_spark.operators.ivf import CELL_CAP
 from stock_trend_predictor_spark.operators.statestore import (
     commit_state,
     read_meta,
@@ -104,10 +105,6 @@ SEM_COS_THRESHOLD = 0.35
 #: doc/cluster) — pinned per fold in META's app dict, grown via
 #: :func:`rebucket_semdedup_state` (the sanctioned override).
 N_SEM_BUCKETS = 64
-
-#: mega-cell split threshold for the scoring join (see
-#: operators/ivf.CELL_CAP — 2x the multiprobe-effective design cell).
-CELL_CAP = 3000
 
 #: on-disk layout version, stamped on every commit (the fold-family
 #: discipline: refuse a mismatched layout explicitly).

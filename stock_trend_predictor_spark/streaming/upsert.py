@@ -9,13 +9,13 @@ micro-batch.
 
 Scale design: the target table is laid out in N hash buckets
 (`_bucket = pmod(xxhash64(key), N)` as a partition column). A
-micro-batch only ever rewrites the buckets its keys hash into —
-`partitionOverwriteMode=dynamic` replaces exactly those directories and
-leaves the rest of the table untouched, so the per-batch write cost is
-O(batch ∪ touched-bucket rows), not O(table). At 100 TB pick N so one
-bucket ≈ a few GB (N≈32k); compaction pressure is bounded because a
-bucket is rewritten as one columnar file set per touch, never appended
-row-wise.
+micro-batch only ever rewrites the buckets its keys hash into: the
+write's own ``partitionOverwriteMode=dynamic`` option replaces exactly
+those directories and leaves the rest of the table, and the session's
+setting, untouched. The per-batch write cost is O(batch ∪
+touched-bucket rows), not O(table). At 100 TB pick N so one bucket ≈ a
+few GB (N≈32k); compaction pressure is bounded because a bucket is
+rewritten as one columnar file set per touch, never appended row-wise.
 
 Read-modify-write safety: the merged frame is materialized with
 ``localCheckpoint(eager=True)`` BEFORE the overwrite starts — Spark
@@ -81,15 +81,12 @@ def upsert_batch(
         # materialize BEFORE overwriting the directory we just read
         .localCheckpoint(eager=True)
     )
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-            target_dir
-        )
-    finally:
-        spark.conf.set(mode_key, prev)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(BUCKET_COL)
+        .parquet(target_dir)
+    )
     # the write materialized the merge — free its checkpoint blocks
     # so a long-running upsert sink holds batch-bounded storage
     from stock_trend_predictor_spark.operators.checkpoints import (

@@ -1,6 +1,7 @@
 """Incremental rollup maintenance (operators/incremental_agg.py):
 merge law under arbitrary batch splits, persisted-state updates that
-touch only the days in the batch, and read-back equivalence."""
+leave committed files untouched, read-back equivalence, and a
+replayed streaming batch counted once."""
 
 from __future__ import annotations
 
@@ -41,30 +42,29 @@ def test_merge_law_arbitrary_split(spark):
 
 
 def test_state_update_touches_only_batch_days(spark, tmp_path):
+    """A second batch writes only its own partials: every file the
+    first commit wrote stays at the same path with the same mtime."""
     state = str(tmp_path / "state")
     ev = load_table(spark, SF_DIR, "events")
     b1 = ev.where(F.col("ts") < F.lit("2024-01-10").cast("timestamp"))
     b2 = ev.where(F.col("ts") >= F.lit("2024-01-10").cast("timestamp"))
 
-    update_rollup_state(spark, b1, state, key="event_type")
-    early_days = {
-        d for d in os.listdir(state) if d.startswith("day=")
-    }
-    mtimes = {
-        d: os.path.getmtime(os.path.join(state, d)) for d in early_days
-    }
+    def segment_files():
+        root = os.path.join(state, "seg-partials")
+        return {
+            os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+            for d, _, files in os.walk(root)
+            for f in files
+        }
 
-    update_rollup_state(spark, b2, state, key="event_type")
-    # days only in b1 were not rewritten
-    b2_days = {
-        f"day={r[0]}"
-        for r in daily_partials(b2, key="event_type")
-        .select("day")
-        .distinct()
-        .collect()
-    }
-    for d in early_days - b2_days:
-        assert os.path.getmtime(os.path.join(state, d)) == mtimes[d]
+    update_rollup_state(spark, b1, state, key="event_type", batch_id=0)
+    first = segment_files()
+    assert first
+
+    update_rollup_state(spark, b2, state, key="event_type", batch_id=1)
+    after = segment_files()
+    assert {f: after.get(f) for f in first} == first
+    assert len(after) > len(first)
 
     # read-back equals the one-shot rollup
     full = finalize(daily_partials(ev, key="event_type"))
@@ -116,4 +116,22 @@ def test_rollup_sink_streaming_equals_batch(spark, tmp_path):
     q.awaitTermination(120)
 
     full = finalize(daily_partials(ev, key="event_type"))
+    assert _rows(read_rollup(spark, state)) == _rows(full)
+
+    # Un-commit the last batch in the checkpoint, as a crash between
+    # the sink's commit and Spark's would: the restarted query replays
+    # that batch with the same id and rows, and the rollup must not
+    # count it twice.
+    commits = tmp_path / "ckpt" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    (commits / str(last)).unlink()
+    (commits / f".{last}.crc").unlink()
+    q = rollup_sink(
+        stream,
+        state,
+        checkpoint=str(tmp_path / "ckpt"),
+        key="event_type",
+    )
+    q.awaitTermination(120)
+    assert [p["batchId"] for p in q.recentProgress] == [last]
     assert _rows(read_rollup(spark, state)) == _rows(full)

@@ -6,16 +6,18 @@ against realistic plan-line shapes."""
 
 from __future__ import annotations
 
-import sys
+import importlib.util
+import os
 
-sys.path.insert(0, "/root/repo/tools")
+_TOOL = os.path.join(os.path.dirname(__file__), os.pardir, "tools", "plan_lint.py")
+_spec = importlib.util.spec_from_file_location("plan_lint", _TOOL)
+plan_lint = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(plan_lint)
 
-from plan_lint import (
-    GLOBAL_WINDOW_WHITELIST,
-    TINY_CARD_COLS,
-    TINY_PARTITION_WHITELIST,
-    _window_nodes,
-)
+GLOBAL_WINDOW_WHITELIST = plan_lint.GLOBAL_WINDOW_WHITELIST
+TINY_CARD_COLS = plan_lint.TINY_CARD_COLS
+TINY_PARTITION_WHITELIST = plan_lint.TINY_PARTITION_WHITELIST
+_window_nodes = plan_lint._window_nodes
 
 
 def test_ordered_unpartitioned_window_is_flagged_shape():

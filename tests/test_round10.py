@@ -481,7 +481,7 @@ def test_check_sweep_fresh_flags_every_drift_shape(tmp_path):
     survive a tty progress bar gluing a result line after a \\r."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as E
     from tools.check_sweep_fresh import check, parse_log
 

@@ -342,9 +342,10 @@ def test_semdedup_keeper_laws_under_two_level_blocking(
     keeper laws stay structural: exactly one keeper per cluster and
     it is the min member, every cluster id equals its min member,
     singletons kept, drop count == sum(cluster_size - 1)."""
+    from stock_trend_predictor_spark.plans import dedup_queries
     from stock_trend_predictor_spark.plans.registry import REGISTRY
 
-    monkeypatch.setenv("SEMDEDUP_TWO_LEVEL_MIN_K", "1")
+    monkeypatch.setattr(dedup_queries, "SEMDEDUP_TWO_LEVEL_MIN_K", 1)
     out = REGISTRY["semdedup_keep_decision"].fn(spark, sf_dir).collect()
     by_cluster = {}
     for r in out:

@@ -480,27 +480,20 @@ def test_cell_knn_pairs_cap_identity(spark):
     assert len(plain) == 120 * 119 + 4 * 12 * 11
 
 
-def test_knn_graph_ivf_unchanged_by_cap(spark, sf_dir):
+def test_knn_graph_ivf_unchanged_by_cap(spark, sf_dir, monkeypatch):
     """The registry query's full output is bit-identical under a cap
     tiny enough to split EVERY cell — the cap is plan-invisible to
     consumers (so the DuckDB oracle needs no regime gate for it)."""
-    import os as _os
-
+    from stock_trend_predictor_spark.operators import ivf
     from stock_trend_predictor_spark.plans.registry import REGISTRY
 
     base = sorted(
         map(tuple, REGISTRY["knn_graph_ivf"].fn(spark, sf_dir).collect())
     )
-    _os.environ["KNN_GRAPH_CELL_CAP"] = "7"
-    try:
-        capped = sorted(
-            map(
-                tuple,
-                REGISTRY["knn_graph_ivf"].fn(spark, sf_dir).collect(),
-            )
-        )
-    finally:
-        del _os.environ["KNN_GRAPH_CELL_CAP"]
+    monkeypatch.setattr(ivf, "CELL_CAP", 7)
+    capped = sorted(
+        map(tuple, REGISTRY["knn_graph_ivf"].fn(spark, sf_dir).collect())
+    )
     assert capped == base and len(base) > 0
 
 

@@ -816,39 +816,6 @@ def test_stream_stream_left_outer_emits_unmatched_after_watermark(
     spark.catalog.dropTempView("ss_louter")
 
 
-def test_dedup_within_watermark_collapses_jittered_replays(
-    spark, tmp_path
-):
-    """Replays of the same (symbol, close) with jittered timestamps
-    collapse to one tick; distinct business events survive."""
-    from stock_trend_predictor_spark.streaming.ingest import (
-        dedup_ticks_fuzzy,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    _write_jsonl(src / "b0.jsonl", [
-        {"timestamp": "2024-01-01 09:30:00", "symbol": "AAPL", "close": 10.0},
-        # retransmit 7s later with a fresh stamp — same business event
-        {"timestamp": "2024-01-01 09:30:07", "symbol": "AAPL", "close": 10.0},
-        {"timestamp": "2024-01-01 09:31:00", "symbol": "AAPL", "close": 11.0},
-        {"timestamp": "2024-01-01 09:31:00", "symbol": "MSFT", "close": 10.0},
-    ])
-    ticks = dedup_ticks_fuzzy(read_tick_file_stream(spark, str(src)))
-    q = (
-        ticks.select("symbol", "ts", "close")
-        .writeStream.format("memory").queryName("fuzzy_dedup")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r["symbol"], r["close"])
-        for r in spark.sql("SELECT * FROM fuzzy_dedup").collect()
-    )
-    assert got == [("AAPL", 10.0), ("AAPL", 11.0), ("MSFT", 10.0)]
-    spark.catalog.dropTempView("fuzzy_dedup")
-
-
 def test_minhash_admission_stream_equals_batch(spark, tmp_path):
     """Streaming near-dup admission (foreachBatch over 3 file-batches)
     must produce EXACTLY the keeper set of sequentially applying the

@@ -71,7 +71,10 @@ def test_upsert_merge_semantics(spark, tmp_path):
 def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     """Dynamic partition overwrite must leave buckets the batch does
     not touch byte-identical — that's what bounds per-batch write cost
-    at table scale."""
+    at table scale — and must leave the session's overwrite mode as it
+    found it."""
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(mode_key, None)
     target = str(tmp_path / "tbl")
     # pick keys guaranteed to land in different buckets
     ka, kb = "A", next(
@@ -102,6 +105,7 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     }
     assert after == before  # untouched bucket: same files, same mtimes
     assert _state(spark, target)[kb] == ("b2", 2)
+    assert spark.conf.get(mode_key, None) == mode
 
 
 def test_upsert_sink_streaming(spark, tmp_path):

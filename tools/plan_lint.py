@@ -50,10 +50,12 @@ Usage: python tools/plan_lint.py
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.001"
 
@@ -465,7 +467,7 @@ def main() -> int:
     for name, kinds in arrow_users:
         lines.append(f"- `{name}`: {', '.join(kinds)}")
     lines.append("")
-    with open("/root/repo/PLAN_LINT.md", "w") as f:
+    with open(os.path.join(ROOT, "PLAN_LINT.md"), "w") as f:
         f.write("\n".join(lines))
     print(
         f"checked={len(REGISTRY)} violations={len(flagged)} "
