@@ -3,90 +3,76 @@ foreachBatch sinks.
 
 foreachBatch delivers at-least-once, so any sink whose state update is
 not idempotent (additive sketches, admission sets, rollups) needs a
-commit protocol: state versions land in fresh ``v-{version}`` dirs
-(one parquet table per name), then ``META.json`` — recording the dir,
-its table names, and the last applied ``batch_id`` — is swapped in
-atomically (tmp file + ``os.replace``). A replayed batch (id <= the
-committed one) is skipped before any write; a crash mid-write leaves
-META pointing at the previous complete version; superseded version
-dirs are GC'd after the commit.
+commit protocol. Every state change in this module follows the same
+three steps:
+
+1. take the state dir's writer lease (:func:`_writer_lease`);
+2. write every new table into a directory no committed META names
+   (:func:`_run_writes`);
+3. swap ``META.json`` atomically (tmp file + ``os.replace``), then GC
+   what the swap superseded (:func:`_swap_meta`).
+
+A crash before step 3 leaves META pointing at the previous complete
+state, and the unreferenced directories are invisible to reads.
 
 Two table classes, two write disciplines:
 
-- **snapshot tables** (``tables=``): rewritten whole every version —
-  right for parameter-sized state (sketch cells, totals, admission
-  frontiers) where the rewrite is cheap and reads stay one file.
-- **append tables** (``appends=``): per-batch DELTA segments written
-  under ``seg-{table}/b-{batch_id}``, with META recording the list of
-  COMMITTED segment paths. Right for corpus-growing, append-only
-  state (band indexes, shingle stores, discovered-pair logs) — the
-  per-commit write is batch-sized instead of corpus-sized, which the
-  30x neardup-fold measure showed dominating the wall once the
-  accumulated index outgrew the arrivals. Crash safety is unchanged:
-  a segment written before a crash is invisible (META still lists the
-  old segment set) and the retried batch overwrites it in place;
-  reads union exactly the committed list, never a directory glob.
+- **snapshot tables** (``tables=``): rewritten whole every version
+  into a fresh ``v-{version}`` dir. Right for parameter-sized state
+  (sketch cells, totals, admission frontiers), where the rewrite is
+  cheap and reads stay one file. A table a commit does not rewrite is
+  carried forward: META's ``table_dirs`` maps each table to the
+  version dir that last wrote it.
+- **append tables** (``appends=``): per-batch delta segments written
+  under ``seg-{table}/b-{version}``, with META recording the list of
+  committed segment paths. Right for corpus-growing, append-only state
+  (band indexes, shingle stores, discovered-pair logs): the per-commit
+  write is batch-sized instead of corpus-sized. Reads union exactly
+  the committed list, never a directory glob.
 
-Append tables can additionally be **hash-bucketed on disk**
-(``append_partition_by=``): a segment written with it is
-directory-partitioned on the named columns (``bucket=K/`` subdirs),
-and :func:`read_state_table` accepts ``partition_filter`` so a probe
-that only needs a key subset reads ONLY those bucket directories —
-Spark's partition pruning discards the rest at planning time, so
-probe READ IO scales with the requesting batch's bucket set, not the
-accumulated corpus. Scale the bucket count with the corpus (the same
-nlist ~ N/500 discipline as operators/ivf.py: pick P so a bucket
-holds a bounded row count) and re-bucket via
-:func:`rebucket_append_table` when the corpus outgrows it — it
-re-derives the bucket column under the new P, rewrites the segments,
-and re-pins the layout parameter in the SAME atomic META swap (the
-only sanctioned override of the first-commit-wins pin).
+**Replay skip.** META records the last applied ``batch_id``; a batch
+whose id is not above it is skipped before any write, so an additive
+update is effectively exactly-once.
 
-Segments of one table may MIX layouts — the LSM-style write path:
-per-batch deltas land UNPARTITIONED (a directory-partitioned write of
-a tiny delta pays repartition + per-dir committer overhead for
-nothing), while compaction rewrites the accumulated list into a
-bucketed segment. ``partition_filter`` stays correct across the mix:
-on a bucketed segment the predicate prunes directories at planning
-time; on a plain delta the bucket is an ordinary column and the same
-predicate is a row filter over a batch-sized file. Steady state under
-periodic compaction = one big PRUNED segment + a few small scanned
-deltas — batch-proportional probe IO either way. (Reads auto-discover
-each segment's layout; META's ``partitioned`` entry only remembers
-the latest layout as the compaction default.)
+**Bucketed segments.** An append segment may be directory-partitioned
+on bucket columns (``append_partition_by=``), and
+:func:`read_state_table`'s ``partition_filter`` then prunes a probe to
+the requested bucket dirs at planning time. Segments of one table may
+mix layouts: per-batch deltas land unpartitioned, and compaction
+rewrites the list into one bucketed segment. The filter stays correct
+across the mix: it prunes directories of a bucketed segment and is a
+row filter over a plain delta. META's ``partitioned`` entry remembers
+the latest layout as the compaction default.
 
-Long-lived folds accumulate one delta segment per batch;
-:func:`compact_append_table` is the OPTIMIZE step — it rewrites the
-committed segment list into one segment and atomically swaps the META
-list, preserving (or re-writing) the bucket layout. Reads are
-row-identical before and after, and a crash between the compacted
-write and the META swap is invisible (the orphan dir is never
-referenced; a later compaction at a higher version overwrites its own
-fresh path).
+**Segment rewrites.** :func:`compact_append_table` (the OPTIMIZE step:
+one segment ``c-{version}``, same rows) and
+:func:`rebucket_append_table` (re-derive the bucket column under a new
+parameter, ``r-{version}``) share one body. Rebucket re-pins the
+layout parameter in ``app`` in the same META swap as the new segment
+lists, so readers never see new-layout dirs under an old pin.
 
-**Single-writer contract — ENFORCED.** One streaming query (or one
-registry build) owns a state dir at a time. Without enforcement two
-concurrent writers both read META ``v_n`` and both swap a ``v_n+1``
-pointer; the second ``os.replace`` wins and silently orphans the
-first writer's segments — a classic lost update that at 100 TB is
-"two ingest jobs pointed at one index", an operator error the layer
-must REFUSE, not absorb (r9 verdict #2). Every META-swapping entry
-point (:func:`commit_state`, :func:`rebucket_append_table`,
-:func:`compact_append_table`) therefore takes a pid-scoped writer
-lease for the duration of its write+swap: ``WRITER.lock`` is created
-atomically (content-complete via ``os.link`` of a prewritten temp —
-never observable half-written), a second writer that finds a lease
-held by a LIVE process raises :class:`ConcurrentWriterError`
-immediately (no partial write), and a lease left by a DEAD process
-(a crashed writer) is stolen so crash-retry keeps working — the
-retried batch re-reads META, which still points at the last complete
-version. Two threads of one process refusing each other is
-intentional: same box, same bug. On a shared object store without
-atomic rename the same protocol rides a conditional-put of META (the
-put's version precondition IS the CAS this lease emulates locally) or
-a log-structured manifest (see sources/tick_api.py's per-batch
-manifest commit) — the local form here keeps the identical
-read/commit API.
+**Pinned parameters.** ``app_meta`` is first-commit-wins: a later
+commit that requests a different value for a pinned key raises.
+Rebucket is the only way to change a pinned value. ``progress_meta``
+is the last-write-wins sibling for running watermarks.
+
+**Single writer, enforced.** One streaming query (or one registry
+build) owns a state dir at a time. Two concurrent writers would both
+read META ``v_n`` and both swap a ``v_n+1``; the second swap would
+silently orphan the first writer's segments. Every entry point that
+swaps META therefore holds a pid-scoped lease, ``WRITER.lock``, for
+the duration of its write and swap. The lease file is created
+content-complete in one step (``os.link`` of a prewritten temp file).
+A second writer that finds the lease held by a live process raises
+:class:`ConcurrentWriterError` before writing anything. A lease left
+by a dead process (a crashed writer) is stolen, so a crash-retry
+keeps working. Two threads of one process refuse each other too. On
+an object store without atomic rename, the same protocol rides a
+conditional put of META.
+
+:func:`write_batch_file` is the same idea for a plain tick sink: a
+batch's rows land as one file named by the query and the batch id, so
+a replayed batch replaces its own file instead of appending again.
 """
 
 from __future__ import annotations
@@ -94,6 +80,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -176,6 +164,17 @@ def _release_writer_lease(lock: str) -> None:
         pass
 
 
+@contextmanager
+def _writer_lease(state_dir: str):
+    """Hold the state dir's writer lease for the body: the one
+    single-writer guard of every entry point that swaps META."""
+    lock = _acquire_writer_lease(state_dir)
+    try:
+        yield
+    finally:
+        _release_writer_lease(lock)
+
+
 def read_meta(state_dir: str) -> dict | None:
     path = os.path.join(state_dir, "META.json")
     if not os.path.exists(path):
@@ -202,36 +201,23 @@ def read_state_table(
     meta = read_meta(state_dir)
     if meta is None:
         return None
-    segs = meta.get("segments", {}).get(name)
-    if segs:
-        parts = [
-            spark.read.parquet(os.path.join(state_dir, s)) for s in segs
-        ]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return _apply_partition_filter(df, partition_filter)
-    if name not in meta["tables"]:
+    if meta["segments"].get(name):
+        df = reduce(
+            DataFrame.unionByName,
+            (spark.read.parquet(os.path.join(state_dir, s))
+             for s in meta["segments"][name]),
+        )
+    elif name in meta["table_dirs"]:
+        df = spark.read.parquet(
+            os.path.join(state_dir, meta["table_dirs"][name], name)
+        )
+    else:
         return None
-    # per-table version dirs: a snapshot table not rewritten by the
-    # latest commit still lives in the version dir that last wrote it
-    # (carried forward by commit_state); legacy METAs without the
-    # mapping fall back to the single latest dir.
-    tdir = meta.get("table_dirs", {}).get(name, meta["dir"])
-    df = spark.read.parquet(os.path.join(state_dir, tdir, name))
-    return _apply_partition_filter(df, partition_filter)
-
-
-def _apply_partition_filter(
-    df: DataFrame, partition_filter: dict[str, list] | None
-) -> DataFrame:
     for col, vals in (partition_filter or {}).items():
         vals = list(vals)
         # empty value set -> empty result (isin with no operands is
         # not a well-defined predicate across engines)
-        df = df.where(
-            F.col(col).isin(vals) if vals else F.lit(False)
-        )
+        df = df.where(F.col(col).isin(vals) if vals else F.lit(False))
     return df
 
 
@@ -295,6 +281,20 @@ def _run_writes(
             f.result()  # propagate the first failure before any swap
 
 
+def _swap_meta(state_dir: str, meta: dict, superseded: list[str]) -> None:
+    """The commit point: write ``META.json.tmp``, ``os.replace`` it
+    over ``META.json``, then GC the dirs (relative to ``state_dir``)
+    that the new META no longer references. A crash before the
+    replace leaves the old META in force; a crash after it leaves at
+    worst unreferenced garbage."""
+    tmp = os.path.join(state_dir, "META.json.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh)
+    os.replace(tmp, os.path.join(state_dir, "META.json"))
+    for rel in superseded:
+        shutil.rmtree(os.path.join(state_dir, rel), ignore_errors=True)
+
+
 def commit_state(
     state_dir: str,
     tables: dict[str, DataFrame],
@@ -314,140 +314,75 @@ def commit_state(
     ``files_per_table`` controls write parallelism: 1 (default) is
     right for parameter-sized state where a single file keeps reads
     cheap; pass more for anything corpus-sized — a coalesce(1)
-    serializes the whole write through one task, which the 30x
-    neardup fold measured as a real wall-clock cost.
+    serializes the whole write through one task.
 
     ``appends`` maps table names to THIS BATCH'S new rows only; the
-    committed table is the union of all committed segments (see
-    module docstring). A name must be consistently snapshot or append
-    across a state dir's lifetime.
+    committed table is the union of all committed segments. A name
+    must be consistently snapshot or append across a state dir's
+    lifetime. Snapshot tables a commit does not rewrite are carried
+    forward (module docstring).
 
     ``append_partition_by`` maps an append-table name to the columns
-    THIS COMMIT'S segment is directory-partitioned on (hash-bucket
-    layout for pruned probe reads — module docstring). Segments of a
-    table may mix layouts (plain hot deltas + bucketed compacted
-    history); the bucket columns must exist as ordinary columns in
-    every plain segment so ``partition_filter`` stays meaningful
-    across the mix.
+    THIS COMMIT'S segment is directory-partitioned on. The bucket
+    columns must exist as ordinary columns in every plain segment so
+    ``partition_filter`` stays meaningful across a mix of layouts.
 
-    ``app_meta`` is a small JSON-able dict of APPLICATION config
-    (bucket counts, thresholds) persisted inside META itself — read
-    it back via read_meta()["app"] with zero Spark jobs. The FIRST
-    committed value wins (later commits cannot silently change a
-    layout-determining parameter); re-requesting a DIFFERENT value
-    for a pinned key raises instead of silently keeping the old one
-    (a caller that trusted its requested value would diverge from the
-    on-disk layout with no signal — r7 advice); a 1-row parquet
-    "config table" measured ~5 s per commit in driver round-trips,
-    this is free.
+    ``app_meta`` is a small JSON-able dict of application config
+    (bucket counts, thresholds) persisted inside META itself, read
+    back via ``read_meta()["app"]`` with zero Spark jobs. The first
+    committed value wins; re-requesting a different value for a
+    pinned key raises, before any write, instead of silently keeping
+    the old one.
 
-    Snapshot tables NOT rewritten by a commit are CARRIED FORWARD:
-    META records a per-table version dir (``table_dirs``), surviving
-    dirs are exempt from GC, and reads resolve each table to the dir
-    that last wrote it. An appends-only commit (``tables={}``) on a
-    dir whose META lists snapshot tables therefore keeps them
-    readable (r7 verdict: it used to GC every prior ``v-*`` dir while
-    writing no new one — silent snapshot loss).
-
-    ``progress_meta`` is the NON-pinned sibling of ``app_meta``: a
-    small JSON-able dict merged last-write-wins into META's
-    ``progress`` entry. Use it for running watermarks an update loop
-    must carry across commits (e.g. the manifest fold's max folded
-    doc_id) — values that by nature CHANGE every batch and so cannot
-    live under the first-commit-wins ``app`` pin. Read back via
-    ``read_meta()["progress"]``; rebucket/compact preserve it.
+    ``progress_meta`` is merged last-write-wins into META's
+    ``progress`` entry: running watermarks an update loop carries
+    across commits (e.g. the manifest fold's max folded doc_id).
+    Rebucket and compact preserve it.
 
     Raises :class:`ConcurrentWriterError` (before any write) if
-    another live process holds the dir's writer lease — the enforced
-    single-writer contract (module docstring)."""
+    another live process holds the dir's writer lease."""
     os.makedirs(state_dir, exist_ok=True)
-    lock = _acquire_writer_lease(state_dir)
-    try:
-        return _commit_state_locked(
-            state_dir,
-            tables,
-            batch_id,
-            files_per_table,
-            appends,
-            append_partition_by,
-            app_meta,
-            progress_meta,
-        )
-    finally:
-        _release_writer_lease(lock)
-
-
-def _commit_state_locked(
-    state_dir: str,
-    tables: dict[str, DataFrame],
-    batch_id: int | None,
-    files_per_table: int,
-    appends: dict[str, DataFrame] | None,
-    append_partition_by: dict[str, list[str]] | None,
-    app_meta: dict | None,
-    progress_meta: dict | None,
-) -> bool:
-    meta = read_meta(state_dir)
-    if (
-        meta is not None
-        and batch_id is not None
-        and meta.get("last_batch_id") is not None
-        and batch_id <= meta["last_batch_id"]
-    ):
-        return False
-    version = 0 if meta is None else meta["version"] + 1
-    vdir = f"v-{version:010d}"
-    # every table's write is an independent Spark job targeting its
-    # own directory, and META is swapped only after ALL of them
-    # complete — so the writes can OVERLAP (one driver thread each;
-    # concurrent jobs back-fill each other's task tails instead of
-    # serializing N write walls per commit). Any failure propagates
-    # before the swap: a partially-written version dir / segment is
-    # never referenced, exactly as in the sequential order.
-    writes: list = []
-    for name, df in tables.items():
-        writes.append((df, os.path.join(state_dir, vdir, name), None))
-    # carry forward snapshot tables this commit did not rewrite:
-    # they stay in the version dir that last wrote them
-    prev_dirs = (
-        {
-            n: meta.get("table_dirs", {}).get(n, meta["dir"])
-            for n in meta["tables"]
+    with _writer_lease(state_dir):
+        meta = read_meta(state_dir) or {
+            "version": -1, "table_dirs": {}, "segments": {},
+            "partitioned": {}, "app": {}, "progress": {},
+            "last_batch_id": None,
         }
-        if meta
-        else {}
-    )
-    table_dirs = {**prev_dirs, **{n: vdir for n in tables}}
-    segments = dict(meta.get("segments", {})) if meta else {}
-    partitioned = dict(meta.get("partitioned", {})) if meta else {}
-    for name, df in (appends or {}).items():
-        # segment path keyed by version so a crash-then-retry (same
-        # logical batch, new version number) never collides with a
-        # committed segment; the orphan from the crashed attempt is
-        # simply never referenced
-        seg = os.path.join(f"seg-{name}", f"b-{version:010d}")
-        pcols = (append_partition_by or {}).get(name)
-        writes.append((df, os.path.join(state_dir, seg), pcols))
-        segments[name] = [*segments.get(name, []), seg]
-        if pcols:
-            partitioned[name] = pcols
-    _run_writes(writes, files_per_table)
-    app = dict(meta.get("app", {})) if meta else {}
-    for k, v in (app_meta or {}).items():
-        if k in app and app[k] != v:
-            raise ValueError(
-                f"app_meta[{k!r}] is pinned to {app[k]!r} by an "
-                f"earlier commit; refusing the conflicting {v!r} "
-                f"(a layout-determining parameter cannot change "
-                f"mid-fold — use rebucket_append_table for bucket "
-                f"counts)"
-            )
-        app.setdefault(k, v)  # first commit wins
-    progress = dict(meta.get("progress", {})) if meta else {}
-    progress.update(progress_meta or {})  # last write wins, by design
-    tmp = os.path.join(state_dir, "META.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
+        last = meta["last_batch_id"]
+        if batch_id is not None and last is not None and batch_id <= last:
+            return False
+        app = dict(meta["app"])
+        for k, v in (app_meta or {}).items():
+            if app.setdefault(k, v) != v:  # first commit wins
+                raise ValueError(
+                    f"app_meta[{k!r}] is pinned to {app[k]!r} by an "
+                    f"earlier commit; refusing the conflicting {v!r} "
+                    f"(a layout-determining parameter cannot change "
+                    f"mid-fold — use rebucket_append_table for bucket "
+                    f"counts)"
+                )
+        version = meta["version"] + 1
+        vdir = f"v-{version:010d}"
+        writes = [
+            (df, os.path.join(state_dir, vdir, name), None)
+            for name, df in tables.items()
+        ]
+        table_dirs = {**meta["table_dirs"], **dict.fromkeys(tables, vdir)}
+        segments = dict(meta["segments"])
+        partitioned = dict(meta["partitioned"])
+        for name, df in (appends or {}).items():
+            # keyed by version, so a crashed attempt's orphan segment
+            # is never referenced and a retry writes a fresh path
+            seg = os.path.join(f"seg-{name}", f"b-{version:010d}")
+            pcols = (append_partition_by or {}).get(name)
+            writes.append((df, os.path.join(state_dir, seg), pcols))
+            segments[name] = [*segments.get(name, []), seg]
+            if pcols:
+                partitioned[name] = pcols
+        _run_writes(writes, files_per_table)
+        live = {vdir, *table_dirs.values()}
+        _swap_meta(
+            state_dir,
             {
                 "format": 2,
                 "version": version,
@@ -457,17 +392,74 @@ def _commit_state_locked(
                 "segments": segments,
                 "partitioned": partitioned,
                 "app": app,
-                "progress": progress,
+                "progress": {**meta["progress"], **(progress_meta or {})},
                 "last_batch_id": batch_id,
             },
-            fh,
+            [n for n in os.listdir(state_dir)
+             if n.startswith("v-") and n not in live],
         )
-    os.replace(tmp, os.path.join(state_dir, "META.json"))  # atomic commit
-    live = {vdir, *table_dirs.values()}
-    for name in os.listdir(state_dir):  # GC superseded versions
-        if name.startswith("v-") and name not in live:
-            shutil.rmtree(os.path.join(state_dir, name), ignore_errors=True)
-    return True
+        return True
+
+
+def _rewrite_segments(
+    spark: SparkSession,
+    state_dir: str,
+    prefix: str,
+    derive: dict,
+    partition_by: dict[str, list[str] | None],
+    app_updates: dict,
+    files_per_table: int,
+) -> bool:
+    """Rewrite each named append table's committed segments into one
+    segment ``seg-{name}/{prefix}-{version}``, then swap META once.
+
+    ``derive`` maps a table to a ``DataFrame -> DataFrame`` callable,
+    or to None for the identity. ``partition_by`` gives a table's new
+    layout; a table it omits keeps its current one. An identity
+    rewrite of a single segment with no new layout has nothing to do
+    and is skipped. ``app_updates`` are re-pinned in the same swap.
+    Returns False when no table was rewritten."""
+    if read_meta(state_dir) is None:
+        return False
+    with _writer_lease(state_dir):
+        meta = read_meta(state_dir)
+        version = meta["version"] + 1
+        segments = dict(meta["segments"])
+        partitioned = dict(meta["partitioned"])
+        writes, superseded = [], []
+        for name, fn in derive.items():
+            segs = segments.get(name)
+            if not segs or (
+                fn is None and len(segs) == 1 and name not in partition_by
+            ):
+                continue
+            df = read_state_table(spark, state_dir, name)
+            pcols = partition_by.get(name, partitioned.get(name))
+            seg = os.path.join(f"seg-{name}", f"{prefix}-{version:010d}")
+            writes.append(
+                (fn(df) if fn else df, os.path.join(state_dir, seg), pcols)
+            )
+            superseded += segs
+            segments[name] = [seg]
+            if pcols:
+                partitioned[name] = pcols
+            else:
+                partitioned.pop(name, None)
+        if not writes:
+            return False
+        _run_writes(writes, files_per_table)
+        _swap_meta(
+            state_dir,
+            {
+                **meta,
+                "version": version,
+                "segments": segments,
+                "partitioned": partitioned,
+                "app": {**meta["app"], **app_updates},
+            },
+            superseded,
+        )
+        return True
 
 
 def rebucket_append_table(
@@ -482,89 +474,24 @@ def rebucket_append_table(
     grow lever for a fold whose corpus outgrew its on-disk bucket
     count. ``recompute`` maps table names to ``DataFrame ->
     DataFrame`` callables that RE-DERIVE the bucket column under the
-    new parameter (the derivation is application knowledge — e.g.
-    ``pmod(xxhash64(band_id, bkey), new_p)``); ``partition_by`` gives
-    each table's directory-partition columns for the rewritten
-    segment; ``app_updates`` are the layout keys to re-pin (e.g.
-    ``{"n_band_buckets": new_p}``) — this is the ONE sanctioned
-    override of ``commit_state``'s first-commit-wins pin, and it
-    lands in the SAME atomic META swap as the segment lists, so
-    readers can never observe new-P directories under an old-P pin
-    (the silent mis-prune a naive directory rewrite would cause).
+    new parameter (e.g. ``pmod(xxhash64(band_id, bkey), new_p)``);
+    ``partition_by`` gives each table's directory-partition columns
+    for the rewritten segment; ``app_updates`` are the layout keys to
+    re-pin (e.g. ``{"n_band_buckets": new_p}``). This is the one
+    sanctioned override of ``commit_state``'s first-commit-wins pin,
+    and it lands in the same atomic META swap as the segment lists.
 
-    ALL named tables rewrite before the single swap — tables whose
-    bucket derivations share the parameter (bands + shingles) change
-    together or not at all. Crash safety: rewritten segments land
-    under ``seg-{name}/r-{version}`` first; a crash pre-swap leaves
-    META (old segments, old pin) untouched and the orphan dirs
-    unreferenced — a retry at the same version overwrites them in
-    place. Old segment dirs are GC'd only after the swap. Returns
-    False when no named table has committed segments. Holds the
-    dir's writer lease for the whole rewrite+swap (raises
-    :class:`ConcurrentWriterError` against a live concurrent
-    writer — module docstring)."""
-    if read_meta(state_dir) is None:
-        return False
-    lock = _acquire_writer_lease(state_dir)
-    try:
-        return _rebucket_append_table_locked(
-            spark, state_dir, recompute, partition_by, app_updates,
-            files_per_table,
-        )
-    finally:
-        _release_writer_lease(lock)
-
-
-def _rebucket_append_table_locked(
-    spark: SparkSession,
-    state_dir: str,
-    recompute: dict,
-    partition_by: dict[str, list[str]],
-    app_updates: dict,
-    files_per_table: int,
-) -> bool:
-    meta = read_meta(state_dir)
-    if meta is None:
-        return False
-    version = meta["version"] + 1
-    segments = dict(meta.get("segments", {}))
-    partitioned = dict(meta.get("partitioned", {}))
-    old_segs: list[str] = []
-    rewrote = False
-    for name, fn in recompute.items():
-        segs = segments.get(name)
-        if not segs:
-            continue
-        df = fn(read_state_table(spark, state_dir, name))
-        pcols = partition_by.get(name)
-        new_seg = os.path.join(f"seg-{name}", f"r-{version:010d}")
-        _write_segment(
-            df, os.path.join(state_dir, new_seg), pcols, files_per_table
-        )
-        old_segs.extend(segs)
-        segments[name] = [new_seg]
-        if pcols:
-            partitioned[name] = pcols
-        rewrote = True
-    if not rewrote:
-        return False
-    app = {**meta.get("app", {}), **app_updates}
-    tmp = os.path.join(state_dir, "META.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                **meta,
-                "version": version,
-                "segments": segments,
-                "partitioned": partitioned,
-                "app": app,
-            },
-            fh,
-        )
-    os.replace(tmp, os.path.join(state_dir, "META.json"))  # atomic swap
-    for s in old_segs:  # GC only after the swap is durable
-        shutil.rmtree(os.path.join(state_dir, s), ignore_errors=True)
-    return True
+    All named tables rewrite before the single swap, so tables whose
+    bucket derivations share the parameter change together or not at
+    all. Rewritten segments land under ``seg-{name}/r-{version}``; a
+    crash before the swap leaves META (old segments, old pin) in
+    force. Returns False when no named table has committed segments.
+    Raises :class:`ConcurrentWriterError` against a live concurrent
+    writer."""
+    return _rewrite_segments(
+        spark, state_dir, "r", recompute, partition_by, app_updates,
+        files_per_table,
+    )
 
 
 def compact_append_table(
@@ -575,75 +502,56 @@ def compact_append_table(
     repartition_by: list[str] | None = None,
 ) -> bool:
     """OPTIMIZE an append table: rewrite its committed delta segments
-    into ONE compacted segment and atomically swap META's segment
-    list. Returns False if there is nothing to do — no committed
-    segments, or a single segment with no re-layout requested
-    (``repartition_by`` forces a single-segment rewrite too: that is
-    the plain-delta -> bucketed-layout conversion). Reads are
-    identical before/after (same row multiset — law-tested); the
-    bucket layout is preserved, or a plain-delta table converts to
-    the bucketed layout when ``repartition_by`` names its existing
-    bucket columns. Compaction never CHANGES bucket values — growing
-    a fold's bucket count is :func:`rebucket_append_table`'s job
-    (it re-derives the column and re-pins the layout parameter in
-    the same swap).
+    into ONE compacted segment ``seg-{name}/c-{version}`` and
+    atomically swap META's segment list. Returns False if there is
+    nothing to do — no committed segments, or a single segment with
+    no re-layout requested (``repartition_by`` forces a
+    single-segment rewrite too: that is the plain-delta -> bucketed
+    layout conversion). Reads are row-identical before and after; the
+    bucket layout is preserved unless ``repartition_by`` names new
+    bucket columns. Compaction never changes bucket values; growing a
+    fold's bucket count is :func:`rebucket_append_table`'s job.
+    Raises :class:`ConcurrentWriterError` against a live concurrent
+    writer."""
+    relayout = {} if repartition_by is None else {name: repartition_by}
+    return _rewrite_segments(
+        spark, state_dir, "c", {name: None}, relayout, {}, files_per_table
+    )
 
-    Crash safety: the compacted segment lands under ``seg-{name}/
-    c-{version}`` BEFORE the META swap; a crash in between leaves
-    META referencing the old segment list, so the half-written (or
-    fully-written-but-unreferenced) compact dir is invisible. GC of
-    superseded segment dirs happens only after the swap. Holds the
-    dir's writer lease across the rewrite+swap (raises
-    :class:`ConcurrentWriterError` against a live concurrent
-    writer)."""
-    if read_meta(state_dir) is None:
-        return False
-    lock = _acquire_writer_lease(state_dir)
-    try:
-        return _compact_append_table_locked(
-            spark, state_dir, name, files_per_table, repartition_by
+
+def write_batch_file(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write one foreachBatch batch's rows into the parquet sink
+    ``path`` as the single file ``part-<query id>-<batch_id>.parquet``.
+
+    The rows are written to the hidden ``_staging-<batch_id>`` dir
+    inside the sink, then moved in with ``os.replace``: the part file
+    last, after its checksum and the job's ``_SUCCESS`` marker. A
+    replayed batch therefore replaces its own file instead of
+    appending its rows again, and two queries pointed at one sink
+    never overwrite each other's files. The move keeps the mtime the
+    write gave the file. An empty result writes nothing. Must run
+    inside ``foreachBatch``: the query id comes from the streaming
+    query that runs the batch."""
+    query_id = df.sparkSession.sparkContext.getLocalProperty(
+        "sql.streaming.queryId"
+    )
+    if query_id is None:
+        raise RuntimeError(
+            "write_batch_file runs inside foreachBatch only: no "
+            "streaming query id is set on this thread"
         )
-    finally:
-        _release_writer_lease(lock)
+    import pyarrow.parquet as pq
 
-
-def _compact_append_table_locked(
-    spark: SparkSession,
-    state_dir: str,
-    name: str,
-    files_per_table: int,
-    repartition_by: list[str] | None,
-) -> bool:
-    meta = read_meta(state_dir)
-    if meta is None:
-        return False
-    segs = meta.get("segments", {}).get(name)
-    if not segs or (len(segs) <= 1 and repartition_by is None):
-        return False
-    df = read_state_table(spark, state_dir, name)
-    version = meta["version"] + 1
-    pcols = (
-        repartition_by
-        if repartition_by is not None
-        else meta.get("partitioned", {}).get(name)
-    )
-    new_seg = os.path.join(f"seg-{name}", f"c-{version:010d}")
-    _write_segment(
-        df, os.path.join(state_dir, new_seg), pcols, files_per_table
-    )
-    segments = dict(meta.get("segments", {}))
-    old_segs = segments[name]
-    segments[name] = [new_seg]
-    partitioned = dict(meta.get("partitioned", {}))
-    if pcols:
-        partitioned[name] = pcols
-    else:
-        partitioned.pop(name, None)
-    tmp = os.path.join(state_dir, "META.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({**meta, "version": version,
-                   "segments": segments, "partitioned": partitioned}, fh)
-    os.replace(tmp, os.path.join(state_dir, "META.json"))  # atomic swap
-    for s in old_segs:  # GC only after the swap is durable
-        shutil.rmtree(os.path.join(state_dir, s), ignore_errors=True)
-    return True
+    staging = os.path.join(path, f"_staging-{batch_id}")
+    df.coalesce(1).write.mode("overwrite").parquet(staging)
+    # one task writes one file, with the schema only if the result is
+    # empty; its footer has the row count
+    (part,) = [n for n in os.listdir(staging) if n.startswith("part-")]
+    if pq.read_metadata(os.path.join(staging, part)).num_rows:
+        name = f"part-{query_id}-{batch_id:010d}.parquet"
+        for n in sorted(os.listdir(staging)):  # "part-" sorts last
+            os.replace(
+                os.path.join(staging, n),
+                os.path.join(path, n.replace(part, name)),
+            )
+    shutil.rmtree(staging)

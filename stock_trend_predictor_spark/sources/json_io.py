@@ -59,7 +59,8 @@ def read_jsonl_ticks(
     """Typed JSONL scan with quarantine: returns (good, dlq).
 
     good = rows that parsed clean (corrupt column dropped);
-    dlq   = (raw_line,) rows for every malformed input line.
+    dlq   = (_raw,) rows for every malformed input line, the column
+    streaming/routing.py's DLQ sink writes.
     One scan, materialized once at the split boundary (the permissive
     parser only exposes _corrupt_record past a materialization)."""
     from stock_trend_predictor_spark.sources.tables import (
@@ -76,6 +77,6 @@ def read_jsonl_ticks(
         "_corrupt_record"
     )
     dlq = raw.where(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_corrupt_record").alias("raw_line")
+        F.col("_corrupt_record").alias("_raw")
     )
     return good, dlq

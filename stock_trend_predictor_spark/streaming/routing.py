@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from stock_trend_predictor_spark.operators.statestore import write_batch_file
 from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 
 
@@ -33,9 +34,10 @@ def route_by_source(
     route per micro-batch.
 
     A row with a ``_corrupt_record`` goes to the DLQ as its raw line, in
-    a single ``_raw`` column. The sinks are at-least-once: a replayed
-    ``foreachBatch`` appends its batch again (see ROADMAP's exactly-once
-    item).
+    a single ``_raw`` column. Each route's file is named by the query
+    and the batch id (``statestore.write_batch_file``), so a batch Spark
+    replays after a crash replaces its own files, and a restart from the
+    checkpoint leaves the sinks as a clean run would.
     """
     sinks = {"history": history_path, "realtime": realtime_path, "dlq": corrupt_path}
     route = (
@@ -58,7 +60,7 @@ def route_by_source(
                     rows = rows.select(F.col("_corrupt_record").alias("_raw"))
                 else:
                     rows = rows.drop("_corrupt_record")
-                rows.coalesce(1).write.mode("append").parquet(path)
+                write_batch_file(rows, path, batch_id)
         finally:
             batch.unpersist()
 

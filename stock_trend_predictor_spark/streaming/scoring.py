@@ -8,7 +8,10 @@ set-oriented inside foreachBatch: each micro-batch is one broadcast
 join against the (tiny, pre-trained) models table plus native
 expressions — zero Python in the scoring path — written as one
 parquet file per batch with `symbol` as a data column (S9), not one
-small file per symbol per batch.
+small file per symbol per batch. The file is named by the query and
+the batch id (`statestore.write_batch_file`), so a batch that Spark
+replays after a crash replaces its own file: each prediction is
+written once, as in the reference.
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from stock_trend_predictor_spark.ml.pergroup import score_with_models
+from stock_trend_predictor_spark.operators.statestore import write_batch_file
 from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 
 
@@ -33,10 +37,10 @@ def streaming_score(
     StreamingQuery (availableNow: drain the source, then stop).
     """
 
-    def score_batch(batch: DataFrame, _batch_id: int) -> None:
+    def score_batch(batch: DataFrame, batch_id: int) -> None:
         scored = score_with_models(
             batch.select("symbol", "ts", "open", "close"), models
         )
-        scored.coalesce(1).write.mode("append").parquet(out_path)
+        write_batch_file(scored, out_path, batch_id)
 
     return start_foreach_batch(ticks_stream, score_batch, checkpoint)

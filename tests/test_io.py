@@ -204,6 +204,6 @@ def test_jsonl_roundtrip_and_quarantine(spark, tmp_path):
     good, dlq = read_jsonl_ticks(spark, out)
     assert good.count() == 200
     assert good.where(F.col("symbol") == "BAD").count() == 0
-    bad_lines = [r.raw_line for r in dlq.collect()]
+    bad_lines = [r._raw for r in dlq.collect()]
     assert len(bad_lines) == 2
     assert "not json at all" in bad_lines

@@ -134,3 +134,30 @@ def test_one_module_starts_foreach_batch_queries():
     for needle in (".foreachBatch(", "trigger(availableNow=True)"):
         found = [name for name, text in sources.items() if needle in text]
         assert found == ["streaming/ingest.py"], (needle, found)
+
+
+def test_no_python_file_hard_codes_the_checkout_path():
+    """Scripts and tests resolve the repository root from ``__file__``:
+    a string literal that starts with the checkout's own absolute path
+    imports, reads or overwrites another tree when the repository is
+    checked out anywhere else. A scan of the string literals of every
+    tracked ``*.py`` file; comments may name a path."""
+    import ast
+    import subprocess
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    tracked = subprocess.run(
+        ["git", "ls-files", "*.py"], cwd=root, capture_output=True,
+        text=True, check=True,
+    ).stdout.split()
+    assert tracked
+    found = [
+        (name, node.lineno)
+        for name in tracked
+        for node in ast.walk(ast.parse((root / name).read_text()))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith(str(root))
+    ]
+    assert not found, found

@@ -9,7 +9,10 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -548,11 +551,13 @@ def test_sliding_and_session_windows(spark, tmp_path):
     spark.catalog.dropTempView("sess_test")
 
 
-def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
+def test_checkpoint_restart_is_exactly_once(spark, tmp_path, monkeypatch):
     """ST2: restarting a checkpointed query re-reads NOTHING already
     committed — the durable replacement for the reference's restart-
     replays-everything behavior (no checkpointLocation anywhere in
-    features_engineering.py)."""
+    features_engineering.py). A batch that crashed after its first
+    write is replayed on restart and rewrites its own files, so the
+    history, realtime and DLQ sinks equal a clean run's."""
     src = tmp_path / "in"
     src.mkdir()
     _write_jsonl(src / "batch0.jsonl", TICKS[:2])
@@ -581,6 +586,70 @@ def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
     # old rows not duplicated; exactly the one new realtime row added
     assert len(rt_rows) == n_first + 1
     assert len({(r["symbol"], r["ts"]) for r in rt_rows}) == len(rt_rows)
+
+    # crash: batch 1 raises after its history file is written, and the
+    # restart replays it on the same checkpoint. Every sink must equal a
+    # clean run's.
+    from stock_trend_predictor_spark.streaming import routing
+
+    src = _two_batch_ticks(tmp_path / "in2", extra_raw=[MALFORMED])
+    real = routing.write_batch_file
+
+    def crash_after_history(df, path, batch_id):
+        real(df, path, batch_id)
+        if batch_id == 1 and path.endswith("hist"):
+            raise RuntimeError("injected crash")
+
+    def route(root):
+        sinks = [str(root / d) for d in ("hist", "rt", "dlq")]
+        q = route_by_source(
+            dedup_ticks(read_tick_file_stream(spark, src, max_files_per_trigger=1)),
+            *sinks[:2], checkpoint=str(root / "ckpt"), corrupt_path=sinks[2],
+        )
+        return q, sinks
+
+    monkeypatch.setattr(routing, "write_batch_file", crash_after_history)
+    q, crashed = route(tmp_path / "crash")
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        q.awaitTermination(120)
+    monkeypatch.setattr(routing, "write_batch_file", real)
+    q, crashed = route(tmp_path / "crash")
+    q.awaitTermination(120)
+    assert [p["batchId"] for p in q.recentProgress] == [1]  # the replay
+    q, clean = route(tmp_path / "clean")
+    q.awaitTermination(120)
+    for got, want in zip(crashed, clean):
+        _assert_same_sink(spark, got, want)
+
+
+def _two_batch_ticks(src, extra_raw=()):
+    """Two input files read as batches 0 and 1: history and realtime
+    ticks of three symbols in each, and in batch 1 a replay of a batch-0
+    tick plus ``extra_raw``. Returns the directory."""
+    src.mkdir()
+    for b, minute in enumerate((30, 31)):
+        ticks = [
+            {"timestamp": f"2024-01-01 09:{minute}:{sec:02d}", "symbol": s,
+             "open": 10.0 + b, "close": 11.0 + b, "source": source}
+            for s in ("AAPL", "MSFT", "IBM")
+            for sec, source in ((0, "history"), (30, "realtime"))
+        ]
+        if b:
+            ticks.append(dict(ticks[0], timestamp="2024-01-01 09:30:00"))
+        _write_jsonl(src / f"b{b}.jsonl", ticks, extra_raw if b else ())
+        os.utime(src / f"b{b}.jsonl", (time.time() - 60 + b, time.time() - 60 + b))
+    return str(src)
+
+
+def _assert_same_sink(spark, got, want):
+    """``got`` holds the rows of ``want`` in as many files, and no tick
+    twice."""
+    rows = [tuple(r) for r in spark.read.parquet(got).collect()]
+    assert Counter(rows) == Counter(tuple(r) for r in spark.read.parquet(want).collect())
+    assert len(_parquet_parts(got)) == len(_parquet_parts(want))
+    if "ts" in spark.read.parquet(got).columns:
+        keys = spark.read.parquet(got).select("symbol", "ts").collect()
+        assert len(set(keys)) == len(keys)
 
 
 def test_stream_stream_join_within_tolerance(spark, tmp_path):
@@ -716,7 +785,8 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 
 def test_streaming_inference_foreachbatch(spark, tmp_path):
     """ST7: train once on history, score the stream set-oriented in
-    foreachBatch, one file per batch with symbol a data column (S9)."""
+    foreachBatch, one file per batch with symbol a data column (S9),
+    and none for a batch that scores no row."""
     from stock_trend_predictor_spark.ml.pergroup import train_linreg_closed_form
     from stock_trend_predictor_spark.streaming.scoring import streaming_score
 
@@ -738,14 +808,21 @@ def test_streaming_inference_foreachbatch(spark, tmp_path):
         {"timestamp": "2024-01-01 09:30:00", "symbol": "GOOGL",
          "open": 1.0, "close": 2.0},
     ])
+    # a second batch that scores no row writes no file
+    _write_jsonl(src / "batch1.jsonl", [
+        {"timestamp": "2024-01-01 09:31:00", "symbol": "GOOGL",
+         "open": 1.0, "close": 2.0},
+    ])
+    os.utime(src / "batch0.jsonl", (time.time() - 60, time.time() - 60))
     out = str(tmp_path / "scored")
     q = streaming_score(
-        read_tick_file_stream(spark, str(src)),
+        read_tick_file_stream(spark, str(src), max_files_per_trigger=1),
         models,
         out,
         checkpoint=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
+    assert [p["numInputRows"] for p in q.recentProgress] == [3, 1]
 
     # one file for the batch, symbol stored in it, no symbol= directory
     assert not any(n.startswith("symbol=") for n in os.listdir(out))
@@ -759,6 +836,45 @@ def test_streaming_inference_foreachbatch(spark, tmp_path):
     assert rows["AAPL"]["prediction"] == 1  # predicted above open
     assert rows["MSFT"]["prediction"] == 0  # 0.5*10+3=8 < 10
     assert abs(rows["AAPL"]["change_pct"] - 200.0) < 1e-9
+
+
+def test_streaming_score_replay_after_crash_writes_once(
+    spark, tmp_path, monkeypatch
+):
+    """A scoring batch that crashes after its write, before the batch
+    commits, is replayed on restart and replaces its own file: the
+    scored sink equals a clean run's, with no prediction twice."""
+    from stock_trend_predictor_spark.ml.pergroup import train_linreg_closed_form
+    from stock_trend_predictor_spark.streaming import scoring
+
+    models = train_linreg_closed_form(spark.createDataFrame(
+        [(s, float(o), 2.0 * o + 1.0) for s in ("AAPL", "MSFT") for o in range(1, 11)],
+        "symbol string, open double, close double",
+    ))
+    src = _two_batch_ticks(tmp_path / "in")
+    real = scoring.write_batch_file
+
+    def crash_after_write(df, path, batch_id):
+        real(df, path, batch_id)
+        if batch_id == 1:
+            raise RuntimeError("injected crash")
+
+    def score(root):
+        out = str(root / "scored")
+        ticks = dedup_ticks(read_tick_file_stream(spark, src, max_files_per_trigger=1))
+        return scoring.streaming_score(ticks, models, out, str(root / "ckpt")), out
+
+    monkeypatch.setattr(scoring, "write_batch_file", crash_after_write)
+    q, crashed = score(tmp_path / "crash")
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        q.awaitTermination(120)
+    monkeypatch.setattr(scoring, "write_batch_file", real)
+    q, crashed = score(tmp_path / "crash")
+    q.awaitTermination(120)
+    assert [p["batchId"] for p in q.recentProgress] == [1]  # the replay
+    q, clean = score(tmp_path / "clean")
+    q.awaitTermination(120)
+    _assert_same_sink(spark, crashed, clean)
 
 
 def test_stream_stream_left_outer_emits_unmatched_after_watermark(

@@ -24,8 +24,9 @@ from __future__ import annotations
 import statistics
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF = "/root/testdata/sf0.1"
 

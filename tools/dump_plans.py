@@ -2,12 +2,14 @@
 scale-critical query, so the plan-shape claims in SCALE.md are
 auditable without running anything.
 
-Usage: python tools/dump_plans.py   (writes /root/repo/PLANS.md)
+Usage: python tools/dump_plans.py   (writes PLANS.md at the repository root)
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+_REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(_REPO))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -121,7 +123,7 @@ def main() -> int:
         df = REGISTRY[name].fn(spark, "/root/testdata/sf0.001")
         plan = str(df._jdf.queryExecution().executedPlan())
         out += [f"## {name}", "", f"**must show:** {claim}", "", "```text", plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(_REPO / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(QUERIES)} plans)")
     return 0

@@ -10,8 +10,9 @@ operator in SURVEY §2 / COVERAGE.md is runnable by name.
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main(argv: list[str]) -> int:
