@@ -7,8 +7,7 @@ stops multi-consumer recompute), but Spark only frees a local
 checkpoint's executor blocks when the JVM garbage-collects the RDD
 object, which a long-running driver may never do. A continuous
 ``writeStream`` sink therefore accumulated one checkpoint block set
-PER BATCH, unbounded: six 30x fold builds in one 16 GiB JVM OOM'd
-(r8 ADVICE).
+PER BATCH, unbounded: six 30x fold builds in one 16 GiB JVM OOM'd.
 
 ``release_local_checkpoints`` frees those blocks deterministically:
 a checkpointed DataFrame's analyzed plan is a ``LogicalRDD`` leaf
@@ -28,6 +27,9 @@ tests/test_round9.py for each fold in the family).
 from __future__ import annotations
 
 import contextlib
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -78,18 +80,32 @@ def release_local_checkpoints(*dfs: DataFrame | None) -> None:
             pass  # never let cleanup break the fold itself
 
 
+def scratch_state_dir(tag: str, sf_dir: str) -> str:
+    """A registry query's throwaway fold-state dir,
+    ``<tmp>/<tag>-<basename of sf_dir>-<pid>``, wiped on entry. One dir
+    per (run target, process): a shared per-target dir let two
+    concurrent sessions on one target wipe each other's state
+    mid-fold, and a fresh mkdtemp per call leaked a dir per call.
+    Callers drop it with :func:`materialize_then_cleanup` once the
+    result no longer reads it."""
+    path = os.path.join(
+        tempfile.gettempdir(),
+        f"{tag}-{os.path.basename(os.path.normpath(sf_dir))}-{os.getpid()}",
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
 def materialize_then_cleanup(df: DataFrame, *state_dirs: str) -> DataFrame:
     """Pin a result that lazily reads throwaway fold-state parquet,
-    then delete the state dirs (r8 ADVICE: per-(sf, pid) dirs wiped
-    only at the START of a same-pid rerun leak across processes and
-    accumulate in /tmp over repeated bench/driver invocations).
+    then delete the state dirs: dirs wiped only at the start of a
+    same-pid rerun leak across processes and accumulate in the temp
+    dir over repeated bench/driver invocations.
 
     The eager localCheckpoint materializes the read BEFORE the files
     vanish; the returned frame is self-contained (registry fold
     results are top-k / per-doc sized, so the pinned blocks are
     small and die with the session)."""
-    import shutil
-
     out = df.localCheckpoint(eager=True)
     for d in state_dirs:
         shutil.rmtree(d, ignore_errors=True)

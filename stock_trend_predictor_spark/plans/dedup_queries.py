@@ -1458,9 +1458,10 @@ WHERE {jaccard_raw} >= 0.5
     def neardup_incremental_pairs(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import os
-        import shutil
-        import tempfile
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            materialize_then_cleanup,
+            scratch_state_dir,
+        )
 
         from stock_trend_predictor_spark.streaming.neardup_maintenance import (
             read_neardup_pairs,
@@ -1470,16 +1471,7 @@ WHERE {jaccard_raw} >= 0.5
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        # one state dir per (run target, PROCESS), wiped on entry —
-        # same concurrency discipline as budget_admission_state
-        # (r5 ADVICE: shared dirs let concurrent sessions corrupt
-        # each other's fold)
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"neardup-inc-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("neardup-inc", sf_dir)
         for i in range(3):
             batch = D.with_shingle_hashes(
                 docs.where(F.col("doc_id") % 3 == i)
@@ -1491,9 +1483,6 @@ WHERE {jaccard_raw} >= 0.5
                 batch_id=i,
                 maintain_clusters=False,
             )
-        from stock_trend_predictor_spark.operators.checkpoints import (
-            materialize_then_cleanup,
-        )
 
         # pin the read, then drop the throwaway state dir (r8 ADVICE:
         # per-pid dirs wiped only on same-pid re-entry leak across
@@ -1582,9 +1571,10 @@ FROM documents d LEFT JOIN comp ON comp.node = d.doc_id
     def neardup_incremental_clusters(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import os
-        import shutil
-        import tempfile
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            materialize_then_cleanup,
+            scratch_state_dir,
+        )
 
         from stock_trend_predictor_spark.streaming.neardup_maintenance import (
             read_neardup_clusters,
@@ -1594,20 +1584,12 @@ FROM documents d LEFT JOIN comp ON comp.node = d.doc_id
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"neardup-cc-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("neardup-cc", sf_dir)
         for i in range(3):
             batch = D.with_shingle_hashes(
                 docs.where(F.col("doc_id") % 3 == i)
             ).select("doc_id", "hs")
             update_neardup_state(spark, batch, state_dir, batch_id=i)
-        from stock_trend_predictor_spark.operators.checkpoints import (
-            materialize_then_cleanup,
-        )
 
         return materialize_then_cleanup(
             read_neardup_clusters(spark, state_dir), state_dir
@@ -1861,9 +1843,10 @@ def _register_r7c():
     def decontamination_incremental(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import os
-        import shutil
-        import tempfile
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            materialize_then_cleanup,
+            scratch_state_dir,
+        )
 
         from stock_trend_predictor_spark.streaming.decon_maintenance import (
             read_contamination,
@@ -1874,12 +1857,7 @@ def _register_r7c():
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"decon-inc-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("decon-inc", sf_dir)
         corpus = docs.where(F.col("doc_id") >= 5)
         update_decon_docs(
             spark, corpus.where(F.col("doc_id") % 2 == 0), state_dir, 0
@@ -1890,9 +1868,6 @@ def _register_r7c():
         # the eval suite arrives LAST — retro-screening is the point
         update_decon_bench(
             spark, docs.where(F.col("doc_id") < 5), state_dir, 2
-        )
-        from stock_trend_predictor_spark.operators.checkpoints import (
-            materialize_then_cleanup,
         )
 
         return materialize_then_cleanup(
@@ -1941,9 +1916,11 @@ def _register_r8():
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
         import os
-        import shutil
-        import tempfile
 
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            materialize_then_cleanup,
+            scratch_state_dir,
+        )
         from stock_trend_predictor_spark.operators.ivf import (
             kmeans_centroids,
         )
@@ -1975,12 +1952,7 @@ def _register_r8():
         cents = kmeans_centroids(
             e, k=k, iters=3, vec_col="v", sample_mod=sample_mod
         )
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"knng-inc-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("knng-inc", sf_dir)
         for i in range(3):
             update_knngraph_state(
                 spark,
@@ -1989,9 +1961,6 @@ def _register_r8():
                 cents,
                 batch_id=i,
             )
-        from stock_trend_predictor_spark.operators.checkpoints import (
-            materialize_then_cleanup,
-        )
 
         return materialize_then_cleanup(
             read_knn_graph(spark, state_dir), state_dir
@@ -2032,9 +2001,10 @@ def _register_r8b():
     def decon_screen_steady(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import os
-        import shutil
-        import tempfile
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            materialize_then_cleanup,
+            scratch_state_dir,
+        )
 
         from stock_trend_predictor_spark.streaming.decon_maintenance import (
             read_decon_scores,
@@ -2045,12 +2015,7 @@ def _register_r8b():
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"decon-steady-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("decon-steady", sf_dir)
         corpus = docs.where(F.col("doc_id") >= 5)
         update_decon_docs(
             spark, corpus.where(F.col("doc_id") % 2 == 0), state_dir, 0
@@ -2063,9 +2028,6 @@ def _register_r8b():
         )
         update_decon_docs(
             spark, corpus.where(F.col("doc_id") % 2 == 1), state_dir, 2
-        )
-        from stock_trend_predictor_spark.operators.checkpoints import (
-            materialize_then_cleanup,
         )
 
         return materialize_then_cleanup(
@@ -2104,9 +2066,11 @@ def _register_r8c():
     )
     def knn_graph_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         import os
-        import shutil
-        import tempfile
 
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            materialize_then_cleanup,
+            scratch_state_dir,
+        )
         from stock_trend_predictor_spark.operators.ivf import (
             kmeans_centroids,
         )
@@ -2137,12 +2101,7 @@ def _register_r8c():
                 f"sampled-Lloyd regime (n={n}, k={k}, "
                 f"sample_mod={sample_mod})"
             )
-        base = os.path.join(
-            tempfile.gettempdir(),
-            f"knng-retrain-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(base, ignore_errors=True)
+        base = scratch_state_dir("knng-retrain", sf_dir)
         # generation 0: the stale bridge quantizer (one iteration)
         stale = kmeans_centroids(
             e, k=k, iters=1, vec_col="v", sample_mod=sample_mod
@@ -2165,9 +2124,6 @@ def _register_r8c():
         gen1 = os.path.join(base, "gen1")
         retrain_knngraph_state(spark, gen0, fresh, gen1)
         swap_current_state(base, gen1)
-        from stock_trend_predictor_spark.operators.checkpoints import (
-            materialize_then_cleanup,
-        )
 
         return materialize_then_cleanup(
             read_knn_graph(spark, current_state_dir(base)), base
@@ -2217,9 +2173,11 @@ def _register_r8d():
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
         import os
-        import shutil
-        import tempfile
 
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            materialize_then_cleanup,
+            scratch_state_dir,
+        )
         from stock_trend_predictor_spark.operators.ivf import (
             kmeans_centroids,
         )
@@ -2253,12 +2211,7 @@ def _register_r8d():
         cents = kmeans_centroids(
             e, k=k, iters=3, vec_col="v", sample_mod=sample_mod
         )
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"semdd-inc-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("semdd-inc", sf_dir)
         for i in range(3):
             update_semdedup_state(
                 spark,
@@ -2267,9 +2220,6 @@ def _register_r8d():
                 cents,
                 batch_id=i,
             )
-        from stock_trend_predictor_spark.operators.checkpoints import (
-            materialize_then_cleanup,
-        )
 
         return materialize_then_cleanup(
             read_semdedup_keep(spark, state_dir), state_dir

@@ -255,13 +255,11 @@ WHERE bit_count(xor(ph_a, ph_b)) <= 2
     def phash_incremental_pairs(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import os
-        import shutil
-        import tempfile
-
         from stock_trend_predictor_spark.operators.checkpoints import (
             materialize_then_cleanup,
+            scratch_state_dir,
         )
+
         from stock_trend_predictor_spark.operators.multimodal import (
             perceptual_hash,
         )
@@ -271,15 +269,7 @@ WHERE bit_count(xor(ph_a, ph_b)) <= 2
         )
 
         docs = load_table(spark, sf_dir, "documents")
-        # one state dir per (run target, PROCESS), wiped on entry —
-        # the fold-family concurrency discipline (r5 ADVICE), removed
-        # again after the read materializes (r8 ADVICE)
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"phash-inc-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("phash-inc", sf_dir)
         for i in range(3):
             batch = perceptual_hash(
                 attach_payload(docs.where(F.col("doc_id") % 3 == i))

@@ -674,9 +674,10 @@ FROM c WHERE cum <= (SELECT budget FROM b)
     def budget_admission_state(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import os
-        import shutil
-        import tempfile
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            materialize_then_cleanup,
+            scratch_state_dir,
+        )
 
         from stock_trend_predictor_spark.streaming.budget import (
             read_admitted_docs,
@@ -697,17 +698,7 @@ FROM c WHERE cum <= (SELECT budget FROM b)
                 " DIV (COUNT(DISTINCT source) * 2)"
             ),
         ).first()
-        # one state dir per (run target, PROCESS), wiped on entry — a
-        # fresh mkdtemp per invocation would leak a parquet-filled dir
-        # every bench/sweep repetition, and a shared per-target dir
-        # let two concurrent sessions (bench + driver-sim on the same
-        # SF) wipe each other's state mid-fold (r5 ADVICE)
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"budget-adm-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("budget-adm", sf_dir)
         splits = [
             docs.where(F.col("doc_id") <= F.lit(lo)),
             docs.where(
@@ -720,9 +711,6 @@ FROM c WHERE cum <= (SELECT budget FROM b)
             update_budget_state(
                 spark, part, state_dir, budget=int(budget), batch_id=i
             )
-        from stock_trend_predictor_spark.operators.checkpoints import (
-            materialize_then_cleanup,
-        )
 
         # pin the read, then drop the throwaway state dir (r8 ADVICE:
         # per-pid dirs wiped only on same-pid re-entry leak across
@@ -966,9 +954,10 @@ def _register_r6c():
     def dsir_incremental_weights(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import os
-        import shutil
-        import tempfile
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            materialize_then_cleanup,
+            scratch_state_dir,
+        )
 
         from stock_trend_predictor_spark.streaming.dsir_maintenance import (
             read_dsir_weights,
@@ -978,12 +967,7 @@ def _register_r6c():
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "text"
         )
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"dsir-inc-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("dsir-inc", sf_dir)
         for i in range(3):
             update_dsir_state(
                 spark,
@@ -993,9 +977,6 @@ def _register_r6c():
             )
         per_doc = read_dsir_weights(spark, state_dir)
         lw = stable_round(F.col("__s"), 6)
-        from stock_trend_predictor_spark.operators.checkpoints import (
-            materialize_then_cleanup,
-        )
 
         return materialize_then_cleanup(
             per_doc.select(
@@ -1160,9 +1141,10 @@ FROM per_doc
     def dsir_retarget_weights(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import os
-        import shutil
-        import tempfile
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            materialize_then_cleanup,
+            scratch_state_dir,
+        )
 
         from stock_trend_predictor_spark.streaming.dsir_maintenance import (
             retarget_dsir_weights,
@@ -1172,12 +1154,7 @@ FROM per_doc
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "text"
         )
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"dsir-ret-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("dsir-ret", sf_dir)
         for i in range(3):
             update_dsir_state(
                 spark,
@@ -1193,9 +1170,6 @@ FROM per_doc
             ),
         )
         lw = stable_round(F.col("__s"), 6)
-        from stock_trend_predictor_spark.operators.checkpoints import (
-            materialize_then_cleanup,
-        )
 
         return materialize_then_cleanup(
             per_doc.select(

@@ -1254,8 +1254,10 @@ FROM ranked WHERE rank <= 10
     def ann_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         import os
         import shutil
-        import tempfile
 
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            scratch_state_dir,
+        )
         from stock_trend_predictor_spark.operators.ivf import (
             ivf_topk,
             kmeans_centroids,
@@ -1292,17 +1294,7 @@ FROM ranked WHERE rank <= 10
             id_col="neighbor_id",
             vec_col="cv",
         )
-        # one state dir per (run target, PROCESS), wiped on entry — a
-        # fresh mkdtemp per invocation would leak a parquet-filled dir
-        # every bench/sweep repetition, and a shared per-target dir
-        # let two concurrent sessions (bench + driver-sim on the same
-        # SF) wipe each other's state mid-fold (r5 ADVICE)
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"ivf-maint-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("ivf-maint", sf_dir)
         update_ivf_state(spark, even, state_dir, init, batch_id=0)
         update_ivf_state(spark, odd, state_dir, init, batch_id=1)
         cents = maintained_centroids(spark, state_dir, init)

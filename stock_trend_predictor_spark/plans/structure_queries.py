@@ -601,11 +601,10 @@ LEFT JOIN bud ON bud.doc_id = q.doc_id
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
         import os
-        import shutil
-        import tempfile
 
         from stock_trend_predictor_spark.operators.checkpoints import (
             materialize_then_cleanup,
+            scratch_state_dir,
         )
         from stock_trend_predictor_spark.operators.ivf import (
             kmeans_centroids,
@@ -657,12 +656,7 @@ LEFT JOIN bud ON bud.doc_id = q.doc_id
                 " DIV (COUNT(DISTINCT source) * 2)"
             ),
         ).first()
-        base = os.path.join(
-            tempfile.gettempdir(),
-            f"manifest-inc-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(base, ignore_errors=True)
+        base = scratch_state_dir("manifest-inc", sf_dir)
         # the bench suite registers FIRST (batch 0 of the shared id
         # sequence); the three corpus batches follow as 1..3
         update_manifest_bench(

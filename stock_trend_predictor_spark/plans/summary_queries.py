@@ -570,9 +570,10 @@ def _register_r8():
         "guard) in tests/test_round8.py.",
     )
     def bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-        import shutil
-        import tempfile
+        from stock_trend_predictor_spark.operators.checkpoints import (
+            materialize_then_cleanup,
+            scratch_state_dir,
+        )
 
         from stock_trend_predictor_spark.streaming.retrieval_maintenance import (
             read_bm25_search,
@@ -582,12 +583,7 @@ def _register_r8():
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        state_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"bm25-inc-{os.path.basename(os.path.normpath(sf_dir))}"
-            f"-{os.getpid()}",
-        )
-        shutil.rmtree(state_dir, ignore_errors=True)
+        state_dir = scratch_state_dir("bm25-inc", sf_dir)
         for i in range(3):
             update_retrieval_state(
                 spark,
@@ -595,9 +591,6 @@ def _register_r8():
                 state_dir,
                 batch_id=i,
             )
-        from stock_trend_predictor_spark.operators.checkpoints import (
-            materialize_then_cleanup,
-        )
 
         # pin the read, then drop the throwaway state dir (r8 ADVICE:
         # per-pid dirs wiped only on same-pid re-entry leak across

@@ -32,6 +32,9 @@ tables APPEND segments:
   per-doc ``hs`` is distinct and the delta is disjoint from the
   stored set, so hits(union) = hits(stored) + hits(delta).
 
+The tables and the format stamp are declared once, in
+:data:`DECON_LAYOUT` (operators/statestore.py, fold layouts).
+
 Two reads:
 
 - ``read_contamination`` — the FULL RECOMPUTE: explode every stored
@@ -41,7 +44,7 @@ Two reads:
   shares ``decontaminate_ngram_overlap``'s full DuckDB oracle
   verbatim (the registry queries fold the same split) — the
   oracle-sharing pattern of ``dsir_incremental_weights``.
-- ``read_decon_scores`` — the STEADY-STATE screen (r7 verdict #7):
+- ``read_decon_scores`` — the STEADY-STATE screen:
   one latest-wins scan of the parameter-light ``scores`` table, ZERO
   profile explodes — per-read IO tracks the corpus's score rows
   (~32 B/doc), not its shingle profiles, and the expensive retro
@@ -63,51 +66,30 @@ from pyspark.sql import functions as F
 
 from stock_trend_predictor_spark.functions.exact import stable_round
 from stock_trend_predictor_spark.operators.statestore import (
-    commit_state,
+    FoldLayout,
+    begin_fold,
+    check_fold_format,
+    commit_fold,
     read_meta,
     read_state_table,
 )
 
-#: on-disk layout version (stamped in META's app dict). v2 (r8) adds
-#: the maintained ``scores`` table + delta-only ``bench_grams`` rows
-#: with a ``rev`` column; a v1 dir (r7 — full bench rows, no scores)
-#: would silently under-report through read_decon_scores, so the fold
-#: refuses it explicitly (the neardup fold's format discipline).
-DECON_FORMAT = 2
-
-
-def _check_decon_format(meta: dict | None) -> None:
-    if meta is None:
-        return
-    app = meta.get("app", {})
-    fmt = app.get("decon_format")
-    if fmt is not None and int(fmt) != DECON_FORMAT:
-        raise RuntimeError(
-            f"decon state dir is fold format v{fmt}; this build reads "
-            f"v{DECON_FORMAT} — re-fold (or run the matching build)"
-        )
-    has_segments = any(
-        t in meta.get("segments", {})
-        for t in ("doc_grams", "bench_grams")
-    )
-    if has_segments and fmt is None:
-        raise RuntimeError(
-            "decon state dir uses the pre-v2 layout (no maintained "
-            "scores table; bench_grams rows lack 'rev'): "
-            "read_decon_scores would under-report and a bench fold "
-            "would double-count overlapping grams. Re-fold into a "
-            "fresh state dir."
-        )
-
-
-def _replayed(state_dir: str, batch_id: int) -> bool:
-    meta = read_meta(state_dir)
-    _check_decon_format(meta)
-    return (
-        meta is not None
-        and meta.get("last_batch_id") is not None
-        and batch_id <= meta["last_batch_id"]
-    )
+#: the fold's on-disk layout. Format v2 keeps a maintained ``scores``
+#: table and delta-only ``bench_grams`` rows with a ``rev`` column; an
+#: unstamped (v1) dir would silently under-report through
+#: read_decon_scores, so it is refused.
+DECON_LAYOUT = FoldLayout(
+    name="decon",
+    tables={"doc_grams": None, "bench_grams": None, "scores": None},
+    format_key="decon_format",
+    version=2,
+    legacy=(
+        "uses the pre-v2 layout (no maintained scores table; "
+        "bench_grams rows lack 'rev'): read_decon_scores would "
+        "under-report and a bench fold would double-count overlapping "
+        "grams"
+    ),
+)
 
 
 def _hits_against(profiles: DataFrame, grams: DataFrame) -> DataFrame:
@@ -150,7 +132,7 @@ def update_decon_docs(
         with_shingle_hashes,
     )
 
-    if _replayed(state_dir, batch_id):
+    if begin_fold(DECON_LAYOUT, state_dir, batch_id) is None:
         return
     grams = (
         with_shingle_hashes(batch)
@@ -166,13 +148,9 @@ def update_decon_docs(
         "n_contaminated",
         F.lit(int(batch_id)).alias("rev"),
     )
-    commit_state(
-        state_dir,
-        {},
-        batch_id=batch_id,
-        files_per_table=8,
-        appends={"doc_grams": grams, "scores": scores},
-        app_meta={"decon_format": DECON_FORMAT},
+    commit_fold(
+        spark, DECON_LAYOUT, state_dir, batch_id,
+        {"doc_grams": grams, "scores": scores},
     )
     # the commit materialized both deltas — free the shingle
     # checkpoint so a continuous sink's storage stays batch-bounded
@@ -201,7 +179,7 @@ def update_decon_bench(
         with_shingle_hashes,
     )
 
-    if _replayed(state_dir, batch_id):
+    if begin_fold(DECON_LAYOUT, state_dir, batch_id) is None:
         return
     suite = (
         with_shingle_hashes(bench_docs)
@@ -250,14 +228,7 @@ def update_decon_bench(
                 ).cast("bigint").alias("n_contaminated"),
                 rev,
             )
-    commit_state(
-        state_dir,
-        {},
-        batch_id=batch_id,
-        files_per_table=8,
-        appends=appends,
-        app_meta={"decon_format": DECON_FORMAT},
-    )
+    commit_fold(spark, DECON_LAYOUT, state_dir, batch_id, appends)
     from stock_trend_predictor_spark.operators.checkpoints import (
         release_local_checkpoints,
     )
@@ -291,7 +262,7 @@ def read_decon_scores(
     >= 1 shingle with the current bench set). Equal to the full
     recompute after every commit (law-tested), so it inherits the
     decontaminate_ngram_overlap oracle. None before any doc commit."""
-    _check_decon_format(read_meta(state_dir))
+    check_fold_format(DECON_LAYOUT, read_meta(state_dir))
     latest = _latest_scores(spark, state_dir)
     if latest is None:
         return None

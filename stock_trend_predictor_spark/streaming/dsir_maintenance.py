@@ -37,12 +37,20 @@ from pyspark.sql import functions as F
 
 from stock_trend_predictor_spark.functions.text import hash60
 from stock_trend_predictor_spark.operators.statestore import (
+    FoldLayout,
+    begin_fold,
     commit_state,
-    read_meta,
     read_state_table,
 )
 
 N_BUCKETS = 2048
+
+#: the fold's on-disk layout: two snapshot count tables and the
+#: doc-profile segments, no bucketing and no format stamp.
+DSIR_LAYOUT = FoldLayout(
+    name="dsir",
+    tables={"raw_counts": None, "target_counts": None, "doc_buckets": None},
+)
 
 
 def doc_bucket_profile(
@@ -111,12 +119,7 @@ def update_dsir_state(
     batch — exactly the O(corpus) per-commit IO this design exists to
     avoid — so the invariant is an input contract, not an inline
     check."""
-    meta = read_meta(state_dir)
-    if (
-        meta is not None
-        and meta.get("last_batch_id") is not None
-        and batch_id <= meta["last_batch_id"]
-    ):
+    if begin_fold(DSIR_LAYOUT, state_dir, batch_id) is None:
         return
     if target is None:
         target = F.col("lang") == "en"

@@ -59,10 +59,12 @@ def parse_tick_envelope(raw: DataFrame, value_col: str = "value") -> DataFrame:
 
     PERMISSIVE parse with corrupt-record capture; the close-only tick
     variant is folded into the superset by coalescing close_price into
-    close. A row that is not a tick (malformed JSON, or no `symbol` or
-    `timestamp`, as for an empty line or a null value) keeps its raw
-    line in `_corrupt_record` ("" for a null value) so a DLQ sink can
-    route it; the column is null on every tick.
+    close. A row that is not a tick (malformed JSON, a field of the
+    wrong type, or no `symbol` or `timestamp`, as for an empty line or
+    a null value) keeps its raw line in `_corrupt_record` ("" for a
+    null value) so a DLQ sink can route it; the column is null on
+    every tick. Such a row's `symbol` and `ts` are null too, so its
+    dedup key can never equal a tick's and displace it.
     """
     value = F.col(value_col).cast("string")
     parsed = raw.select(
@@ -77,8 +79,8 @@ def parse_tick_envelope(raw: DataFrame, value_col: str = "value") -> DataFrame:
         | F.col("t.timestamp").isNull()
     )
     return parsed.select(
-        F.col("t.symbol").alias("symbol"),
-        F.col("t.timestamp").alias("ts"),
+        F.when(~not_a_tick, F.col("t.symbol")).alias("symbol"),
+        F.when(~not_a_tick, F.col("t.timestamp")).alias("ts"),
         F.col("t.open").alias("open"),
         F.col("t.high").alias("high"),
         F.col("t.low").alias("low"),

@@ -65,7 +65,9 @@ members/toplists writes are batch-proportional (members append-only;
 toplists revisions bounded by batch size x touched cell-mates, with
 the changed-only filter dropping no-op revisions), reads prune to
 touched buckets past PRUNE_MIN_BYTES — the same adaptive rule,
-measured crossover, as the near-dup fold.
+measured crossover, as the near-dup fold. Both tables, their bucket
+columns, the format stamp and the pin are declared once, in
+:data:`KNNGRAPH_LAYOUT` (operators/statestore.py, fold layouts).
 
 The maintained index is a freshness bridge between PERIODIC RETRAINS
 (the ivf_maintenance contract): :func:`retrain_knngraph_state`
@@ -73,8 +75,7 @@ rebuilds the graph from folded state only (no source re-read) under
 fresh centroids into a new dir, and :func:`swap_current_state`
 atomically repoints readers — a crash mid-retrain leaves the old
 generation serving. Within a generation, the pinned bucket count
-grows via :func:`rebucket_knngraph_state` (the near-dup fold's
-sanctioned pin-override pattern), and every commit stamps
+grows via :func:`rebucket_knngraph_state`, and every commit stamps
 ``knngraph_format`` so a mismatched layout is refused explicitly.
 
 Laws in tests/test_round8.py: stream == batch (== knn_graph_ivf) on
@@ -93,15 +94,17 @@ from pyspark.sql import functions as F
 from stock_trend_predictor_spark.operators.ivf import CELL_CAP
 from stock_trend_predictor_spark.operators.similarity import dot
 from stock_trend_predictor_spark.operators.statestore import (
-    commit_state,
-    read_meta,
+    PRUNE_MIN_BYTES,
+    FoldLayout,
+    begin_fold,
+    bucket_expr,
+    bucket_filter,
+    commit_fold,
     read_state_table,
+    rebucket_fold,
+    write_json_atomic,
 )
 from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
-from stock_trend_predictor_spark.streaming.neardup_maintenance import (
-    PRUNE_MIN_BYTES,
-    _state_bytes,
-)
 
 #: default on-disk hash-bucket count for members/toplists; same
 #: sizing discipline as the near-dup fold's N_BAND_BUCKETS (P ~ rows
@@ -113,39 +116,20 @@ N_GRAPH_BUCKETS = 64
 #: neighbors kept per vector — knn_graph_ivf's k.
 TOP_K = 5
 
-#: on-disk layout version, stamped in META's app dict on every
-#: commit (the neardup/decon fold discipline: refuse a mismatched
-#: layout explicitly instead of crashing mid-batch on it).
-KNNGRAPH_FORMAT = 1
-
-
-def _check_graph_format(meta: dict | None) -> None:
-    if meta is None:
-        return
-    app = meta.get("app", {})
-    fmt = app.get("knngraph_format")
-    if fmt is not None and int(fmt) != KNNGRAPH_FORMAT:
-        raise RuntimeError(
-            f"knn-graph state dir is fold format v{fmt}; this build "
-            f"reads v{KNNGRAPH_FORMAT} — retrain into a fresh dir "
-            f"(retrain_knngraph_state) or run the matching build"
-        )
-    if fmt is None and any(
-        t in meta.get("segments", {}) for t in ("members", "toplists")
-    ):
-        raise RuntimeError(
-            "knn-graph state dir has unstamped segments (written by "
-            "a different fold or a pre-release layout) — retrain "
-            "into a fresh dir"
-        )
-
-
-def _cid_bucket(p: int) -> Column:
-    return F.pmod(F.xxhash64(F.col("cid")), F.lit(p))
-
-
-def _q_bucket(p: int, col: str = "query_id") -> Column:
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(p))
+#: the fold's on-disk layout: members bucketed by cell, toplists by
+#: query vector (module docstring).
+KNNGRAPH_LAYOUT = FoldLayout(
+    name="knn-graph",
+    tables={
+        "members": ("bucket", ("cid",)),
+        "toplists": ("qbucket", ("query_id",)),
+    },
+    format_key="knngraph_format",
+    version=1,
+    p_key="n_graph_buckets",
+    p_default=N_GRAPH_BUCKETS,
+    remedy="retrain into a fresh dir (retrain_knngraph_state)",
+)
 
 
 def _nbr_struct(sim: Column, neighbor: Column) -> Column:
@@ -186,10 +170,7 @@ def _scored_new_vs_all(
     idx = (
         all_m.join(F.broadcast(cnt), "cid")
         .withColumn("_k", k_cells)
-        .withColumn(
-            "_j",
-            F.pmod(F.xxhash64(F.col("vec_id")), F.col("_k")).cast("int"),
-        )
+        .withColumn("_j", bucket_expr(["vec_id"], F.col("_k")).cast("int"))
         .select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("v").alias("_nv"),
@@ -255,19 +236,10 @@ def update_knngraph_state(
         job_phase,
     )
 
-    meta = read_meta(state_dir)
-    _check_graph_format(meta)
-    if (
-        meta is not None
-        and meta.get("last_batch_id") is not None
-        and batch_id <= meta["last_batch_id"]
-    ):
+    entry = begin_fold(KNNGRAPH_LAYOUT, state_dir, batch_id, n_buckets)
+    if entry is None:
         return
-    p = (
-        int(meta.get("app", {}).get("n_graph_buckets", n_buckets))
-        if meta
-        else int(n_buckets)
-    )
+    meta, p = entry
     new = batch.select("vec_id", "v").withColumn("nrm", l2norm(F.col("v")))
     # probed membership feeds the bucket-set collect, the scoring
     # join (both sides), and the members segment write — eager once
@@ -281,17 +253,10 @@ def update_knngraph_state(
     cps.append(new_m)
     # ADAPTIVE pruned membership read: only the touched cells'
     # buckets once the members table outgrows the threshold
-    if _state_bytes(state_dir, meta, "members") >= prune_min_bytes:
-        mem_filter = {
-            "bucket": [
-                r["b"]
-                for r in new_m.select(_cid_bucket(p).alias("b"))
-                .distinct()
-                .collect()
-            ]
-        }
-    else:
-        mem_filter = None
+    mem_filter = bucket_filter(
+        KNNGRAPH_LAYOUT, "members", p, new_m, state_dir, meta,
+        prune_min_bytes,
+    )
     prev_m = read_state_table(
         spark, state_dir, "members", partition_filter=mem_filter
     )
@@ -299,13 +264,13 @@ def update_knngraph_state(
     if prev_m is not None:
         # the pruned read admits whole buckets; restrict to the
         # touched cells themselves (broadcast: batch-sized set).
-        # Checkpoint OLD_M, not the union (r11 ADVICE): the membership
-        # feeds THREE consumers — the scoring join's cell counts, its
-        # index side, and the delta path's old_ids — and old_m is the
-        # only piece whose recompute is a state read. With old_m
-        # pinned, all_m stays a lazy union of two checkpointed frames
-        # (block reads per consumer, no second touched-bucket state
-        # read), and new_m's rows are no longer stored twice.
+        # Checkpoint OLD_M, not the union: the membership feeds THREE
+        # consumers — the scoring join's cell counts, its index side,
+        # and the delta path's old_ids — and old_m is the only piece
+        # whose recompute is a state read. With old_m pinned, all_m
+        # stays a lazy union of two checkpointed frames (block reads
+        # per consumer, no second touched-bucket state read), and
+        # new_m's rows are not stored twice.
         with job_phase(spark, f"knnfold{batch_id}:stateread"):
             old_m = (
                 prev_m.drop("bucket")
@@ -370,17 +335,10 @@ def update_knngraph_state(
         cps.append(delta)
         # pruned latest-wins read of ONLY the touched queries' stored
         # lists (every revision of a query shares its qbucket)
-        if _state_bytes(state_dir, meta, "toplists") >= prune_min_bytes:
-            tl_filter = {
-                "qbucket": [
-                    r["b"]
-                    for r in delta.select(_q_bucket(p).alias("b"))
-                    .distinct()
-                    .collect()
-                ]
-            }
-        else:
-            tl_filter = None
+        tl_filter = bucket_filter(
+            KNNGRAPH_LAYOUT, "toplists", p, delta, state_dir, meta,
+            prune_min_bytes,
+        )
         stored = read_state_table(
             spark, state_dir, "toplists", partition_filter=tl_filter
         )
@@ -410,31 +368,18 @@ def update_knngraph_state(
         )
         toplists = toplists.unionByName(revised)
 
-    commit_state(
+    commit_fold(
+        spark,
+        KNNGRAPH_LAYOUT,
         state_dir,
-        {},
-        batch_id=batch_id,
-        files_per_table=8,
-        appends={
-            "members": new_m.withColumn("bucket", _cid_bucket(p)),
-            "toplists": toplists.withColumn("qbucket", _q_bucket(p)),
+        batch_id,
+        {
+            "members": KNNGRAPH_LAYOUT.with_bucket("members", new_m, p),
+            "toplists": KNNGRAPH_LAYOUT.with_bucket("toplists", toplists, p),
         },
-        app_meta={
-            "n_graph_buckets": int(p),
-            "knngraph_format": KNNGRAPH_FORMAT,
-        },
+        p,
+        compact_every,
     )
-    if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-        from stock_trend_predictor_spark.operators.statestore import (
-            compact_append_table,
-        )
-
-        compact_append_table(
-            spark, state_dir, "members", repartition_by=["bucket"]
-        )
-        compact_append_table(
-            spark, state_dir, "toplists", repartition_by=["qbucket"]
-        )
     # free this batch's eager blocks — continuous sinks must hold
     # batch-bounded storage, not one checkpoint set per fold
     from stock_trend_predictor_spark.operators.checkpoints import (
@@ -448,35 +393,11 @@ def rebucket_knngraph_state(
     spark: SparkSession, state_dir: str, new_p: int
 ) -> bool:
     """Grow (or shrink) the fold's on-disk bucket count to ``new_p``
-    — the same sanctioned pin override as the near-dup fold's
-    rebucket_neardup_state: members (cid-hash) and toplists
-    (query-hash) rewrite under the new P and ``n_graph_buckets``
-    re-pins in ONE atomic META swap, so pruned probes never plan
-    against a mixed layout. Post-re-bucket reads are row-identical
-    (law-tested). Run between batches; the next fold reads the new
-    pin from META."""
-    from stock_trend_predictor_spark.operators.statestore import (
-        rebucket_append_table,
-    )
-
-    _check_graph_format(read_meta(state_dir))
-    new_p = int(new_p)
-    if new_p < 1:
-        raise ValueError(f"bucket count must be >= 1, got {new_p}")
-    return rebucket_append_table(
-        spark,
-        state_dir,
-        recompute={
-            "members": lambda df: df.withColumn(
-                "bucket", _cid_bucket(new_p)
-            ),
-            "toplists": lambda df: df.withColumn(
-                "qbucket", _q_bucket(new_p)
-            ),
-        },
-        partition_by={"members": ["bucket"], "toplists": ["qbucket"]},
-        app_updates={"n_graph_buckets": new_p},
-    )
+    (statestore.rebucket_fold): members and toplists rewrite under the
+    new P and ``n_graph_buckets`` re-pins in one META swap.
+    Post-re-bucket reads are row-identical (law-tested). Run between
+    batches; the next fold reads the new pin from META."""
+    return rebucket_fold(spark, KNNGRAPH_LAYOUT, state_dir, new_p)
 
 
 def read_knn_graph(
@@ -572,17 +493,16 @@ def swap_current_state(base_dir: str, state_dir: str) -> None:
     """Atomically point ``base_dir/CURRENT.json`` at ``state_dir`` —
     the serve-path indirection that makes a retrain invisible to
     readers: they resolve the pointer, then read that dir's committed
-    META as usual. tmp-file + os.replace, same crash discipline as
-    the statestore's own META swap (a crash leaves the old pointer;
-    the half-built new dir is simply unreferenced)."""
-    import json
+    META as usual. Written with statestore.write_json_atomic, like
+    META itself: a crash leaves the old pointer, and the half-built
+    new dir is simply unreferenced."""
     import os
 
     os.makedirs(base_dir, exist_ok=True)
-    tmp = os.path.join(base_dir, "CURRENT.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"dir": os.path.abspath(state_dir)}, fh)
-    os.replace(tmp, os.path.join(base_dir, "CURRENT.json"))
+    write_json_atomic(
+        os.path.join(base_dir, "CURRENT.json"),
+        {"dir": os.path.abspath(state_dir)},
+    )
 
 
 def current_state_dir(base_dir: str) -> str | None:

@@ -2,13 +2,13 @@
 per-document keep manifest composing the maintained folds — quality
 gates at arrival, the near-dup fold, the SemDeDup fold, the decon
 steady screen, and budget admission — into a single latest-wins
-verdict row per document (r8 verdict #2). The streaming twin of the
+verdict row per document. The streaming twin of the
 ``corpus_keep_decision`` composition pattern, built from the FOLD
 family instead of one-shot sub-pipelines: arrivals are featurized
 once, every signal is maintained incrementally, and the manifest read
 never re-touches text.
 
-COMPOSITION CONTRACT (what this module adds over the seven folds it
+COMPOSITION CONTRACT (what this module adds over the folds it
 reuses): one base dir, one commit cadence. ``update_manifest_state``
 drives all five constituents for the SAME batch id under
 ``base_dir``:
@@ -29,7 +29,7 @@ drives all five constituents for the SAME batch id under
 Crash/replay discipline ACROSS folds: there is no cross-dir
 transaction — each sub-fold commits its own dir with the shared
 batch id. The manifest's own ``quality`` commit runs LAST, so its
-``last_batch_id`` is the composition's low-water mark: a crash
+committed batch id is the composition's low-water mark: a crash
 mid-composite leaves some sub-folds ahead of the manifest, and the
 at-least-once re-delivery re-runs the batch — already-committed
 sub-folds skip on their replay guards, the missing ones (and the
@@ -44,7 +44,7 @@ only on (docs, bench) sets; budget admission is the doc_id-order
 prefix rule, invariant under ORDER-PRESERVING batching (the one
 order-sensitive constituent — the composition inherits budget.py's
 precondition that arrival order is doc_id order, ENFORCED at
-runtime since r10 via the committed max-doc_id watermark in META's
+runtime via the committed max-doc_id watermark in META's
 ``progress`` entry: an out-of-order batch raises before any
 constituent commit). A deterministic
 CASE over pure signals is pure, so the composed verdict equals the
@@ -74,10 +74,11 @@ two order-preserving splits, prefix parity after every batch, replay
 idempotence (including a partial-crash replay: one sub-fold ahead),
 and checkpoint-release accounting.
 
-MAINTENANCE SURFACE (r10, matching the family contract): the quality
-table carries a ``dbucket`` hash-bucket column under the pinned
-``n_manifest_buckets`` (plain per-batch deltas, bucketed layout via
-``compact_every`` / rebucket — the statestore LSM discipline);
+MAINTENANCE SURFACE: the quality table carries a ``dbucket``
+hash-bucket column under the pinned ``n_manifest_buckets`` (plain
+per-batch deltas, bucketed layout via ``compact_every`` / rebucket),
+declared once in :data:`MANIFEST_LAYOUT` (operators/statestore.py,
+fold layouts);
 :func:`rebucket_manifest_state` re-pins P across the WHOLE
 composition behind an intent marker that makes the mixed-P crash
 window refuse reads instead of mis-pruning (its docstring has the
@@ -98,36 +99,41 @@ from stock_trend_predictor_spark.operators.checkpoints import (
     release_local_checkpoints,
 )
 from stock_trend_predictor_spark.operators.statestore import (
-    commit_state,
+    PRUNE_MIN_BYTES,
+    FoldLayout,
+    begin_fold,
+    check_bucket_count,
+    check_fold_format,
+    commit_fold,
     read_meta,
     read_state_table,
+    rebucket_fold,
+    write_json_atomic,
 )
 from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
-from stock_trend_predictor_spark.streaming.neardup_maintenance import (
-    PRUNE_MIN_BYTES,
-)
 
 #: verdict thresholds — corpus_keep_decision's quality gates.
 MIN_TOKENS = 20
 MIN_DIVERSITY = 0.3
 
-#: on-disk layout version of the manifest's own quality table.
-#: v2 (r10): quality is hash-bucketed on ``dbucket`` like every other
-#: fold's doc-keyed append table (family contract), with the bucket
-#: count pinned as ``n_manifest_buckets``.
-MANIFEST_FORMAT = 2
-
 #: default bucket count for the quality table — matches the
 #: constituents' birth default so a composed re-pin keeps one P.
 N_MANIFEST_BUCKETS = 64
 
+#: the manifest's own on-disk layout: the quality table, hash-bucketed
+#: on ``dbucket`` like every other fold's doc-keyed append table.
+MANIFEST_LAYOUT = FoldLayout(
+    name="manifest",
+    tables={"quality": ("dbucket", ("doc_id",))},
+    format_key="manifest_format",
+    version=2,
+    p_key="n_manifest_buckets",
+    p_default=N_MANIFEST_BUCKETS,
+)
+
 
 def _sub(base_dir: str, name: str) -> str:
     return os.path.join(base_dir, name)
-
-
-def _doc_bucket(p: int) -> Column:
-    return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(p))
 
 
 def _rebucket_intent_path(base_dir: str) -> str:
@@ -156,24 +162,6 @@ def _check_no_rebucket_in_progress(base_dir: str) -> None:
         f"rebucket_manifest_state(spark, base_dir, {target}) to "
         f"completion before folding or reading"
     )
-
-
-def _check_manifest_format(meta: dict | None) -> None:
-    if meta is None:
-        return
-    app = meta.get("app", {})
-    fmt = app.get("manifest_format")
-    if fmt is not None and int(fmt) != MANIFEST_FORMAT:
-        raise RuntimeError(
-            f"manifest state dir is fold format v{fmt}; this build "
-            f"reads v{MANIFEST_FORMAT} — re-fold into a fresh dir"
-        )
-    if fmt is None and "quality" in meta.get("segments", {}):
-        raise RuntimeError(
-            "manifest state dir has unstamped segments (written by a "
-            "different fold or a pre-release layout) — re-fold into "
-            "a fresh dir"
-        )
 
 
 def quality_row(docs: DataFrame) -> DataFrame:
@@ -235,7 +223,7 @@ def update_manifest_state(
     PRECONDITIONS (inherited from the constituents): each doc/vec
     arrives exactly once, and arrival order is doc_id order across
     batches (the budget constituent's hard-frontier law). The order
-    precondition is ENFORCED, not assumed (r9 verdict #3): the
+    precondition is ENFORCED, not assumed: the
     committed max folded doc_id rides META's ``progress`` watermark
     (written atomically with the quality commit — the low-water
     mark, so a partial-crash replay re-checks against the pre-batch
@@ -265,14 +253,10 @@ def update_manifest_state(
     )
 
     _check_no_rebucket_in_progress(base_dir)
-    meta = read_meta(base_dir)
-    _check_manifest_format(meta)
-    if (
-        meta is not None
-        and meta.get("last_batch_id") is not None
-        and batch_id <= meta["last_batch_id"]
-    ):
+    entry = begin_fold(MANIFEST_LAYOUT, base_dir, batch_id)
+    if entry is None:
         return  # the whole composition already folded this batch
+    meta, p = entry
     # featurize the batch once — four constituents consume it
     docs = docs_batch.select("doc_id", "text", "source").localCheckpoint(
         eager=True
@@ -350,42 +334,21 @@ def update_manifest_state(
             raise err
     # the manifest's own commit runs LAST — the composition's
     # low-water mark for the replay discipline. quality is bucketed
-    # on dbucket under the pinned P (family contract), and the
-    # order-watermark advances in the same atomic META swap.
-    p = int(
-        (meta or {}).get("app", {}).get(
-            "n_manifest_buckets", N_MANIFEST_BUCKETS
-        )
-    )
+    # on dbucket under the pinned P, and the order-watermark advances
+    # in the same atomic META swap.
     new_max = hi_id if prior_max is None else max(
         prior_max, hi_id if hi_id is not None else prior_max
     )
-    commit_state(
+    commit_fold(
+        spark,
+        MANIFEST_LAYOUT,
         base_dir,
-        {},
-        batch_id=batch_id,
-        files_per_table=8,
-        appends={
-            "quality": quality_row(docs).withColumn(
-                "dbucket", _doc_bucket(p)
-            )
-        },
-        app_meta={
-            "manifest_format": MANIFEST_FORMAT,
-            "n_manifest_buckets": p,
-        },
-        progress_meta=(
-            {} if new_max is None else {"max_doc_id": new_max}
-        ),
+        batch_id,
+        {"quality": MANIFEST_LAYOUT.with_bucket("quality", quality_row(docs), p)},
+        p,
+        compact_every,
+        progress_meta={} if new_max is None else {"max_doc_id": new_max},
     )
-    if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-        from stock_trend_predictor_spark.operators.statestore import (
-            compact_append_table,
-        )
-
-        compact_append_table(
-            spark, base_dir, "quality", repartition_by=["dbucket"]
-        )
     release_local_checkpoints(docs)
 
 
@@ -412,7 +375,7 @@ def read_curation_manifest(
     )
 
     _check_no_rebucket_in_progress(base_dir)
-    _check_manifest_format(read_meta(base_dir))
+    check_fold_format(MANIFEST_LAYOUT, read_meta(base_dir))
     q = read_state_table(spark, base_dir, "quality")
     if q is None:
         return None
@@ -484,7 +447,7 @@ def rebucket_manifest_state(
 ) -> bool:
     """Grow (or shrink) the COMPOSITION's bucket count in one move —
     the maintenance surface the constituent folds each expose,
-    lifted to the capstone (r9 verdict #3). Re-buckets every
+    lifted to the capstone. Re-buckets every
     bucketed constituent (near-dup bands/shingles/labels, SemDeDup
     members/labels) and the manifest's own quality table under ONE
     target P, re-pinning each dir's layout parameter; decon and
@@ -505,9 +468,6 @@ def rebucket_manifest_state(
     composition's low-water-mark discipline: its re-pin is the
     signal the composed move completed. Returns False before the
     first manifest commit."""
-    from stock_trend_predictor_spark.operators.statestore import (
-        rebucket_append_table,
-    )
     from stock_trend_predictor_spark.streaming.neardup_maintenance import (
         rebucket_neardup_state,
     )
@@ -516,32 +476,17 @@ def rebucket_manifest_state(
     )
 
     meta = read_meta(base_dir)
-    _check_manifest_format(meta)
+    check_fold_format(MANIFEST_LAYOUT, meta)
     if meta is None:
         return False
-    new_p = int(new_p)
-    if new_p < 1:
-        raise ValueError(f"bucket count must be >= 1, got {new_p}")
+    new_p = check_bucket_count(new_p)
     # INTENT first — readers/folders refuse until the move completes
     intent = _rebucket_intent_path(base_dir)
-    tmp = intent + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"target_p": new_p}, fh)
-    os.replace(tmp, intent)
+    write_json_atomic(intent, {"target_p": new_p})
     rebucket_neardup_state(spark, _sub(base_dir, "nd"), new_p)
     rebucket_semdedup_state(spark, _sub(base_dir, "sem"), new_p)
     # the manifest's own rewrite + re-pin LAST (low-water mark)
-    changed = rebucket_append_table(
-        spark,
-        base_dir,
-        recompute={
-            "quality": lambda df: df.withColumn(
-                "dbucket", _doc_bucket(new_p)
-            )
-        },
-        partition_by={"quality": ["dbucket"]},
-        app_updates={"n_manifest_buckets": new_p},
-    )
+    changed = rebucket_fold(spark, MANIFEST_LAYOUT, base_dir, new_p)
     os.unlink(intent)
     return changed
 

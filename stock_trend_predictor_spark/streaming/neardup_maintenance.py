@@ -40,14 +40,14 @@ budget / IVF folds, but delta segments instead of snapshots):
   batch-bounded rows per bucket, for ~32 B/row duplicated write.
   Compact both periodically via statestore.compact_append_table.
 
-P (the bucket count) pins in META's ``app`` dict (statestore
-``app_meta=``; an uncoordinated mid-fold P change would silently
-mis-prune old segments, so the first commit's value wins — and
-reading it is a JSON load, not a Spark job). The one sanctioned way
-to change it is :func:`rebucket_neardup_state`: every bucket-derived
-table rewrites under the new P and the pin updates in the SAME
-atomic META swap, so probes never see new-P directories under an
-old-P pin (pair-set identity across a re-bucket is law-tested).
+The tables, their bucket columns, the format stamp and the pinned
+bucket count P are declared once, in :data:`NEARDUP_LAYOUT`; the
+state store's fold protocol applies them (operators/statestore.py,
+fold layouts). The first commit's P wins, since a mid-fold change
+would silently mis-prune old segments. The one way to change it is
+:func:`rebucket_neardup_state`: every bucketed table rewrites under
+the new P and the pin updates in the same atomic META swap
+(pair-set identity across a re-bucket is law-tested).
 
 Per batch: the NEW documents' bands probe the accumulated index (plus
 the batch itself, so intra-batch duplicates surface immediately);
@@ -65,11 +65,9 @@ Per-commit IO is batch-sized on BOTH sides now:
 - WRITE: all four data tables are append-only (a doc's band/shingle
   rows never change after arrival; a pair is discovered exactly once;
   a label change is a new revision row) — each commit writes only the
-  batch's delta segments under the atomic META pointer. The 30x
-  protocol drove this: full-snapshot commits measured 120.7 s at 30x,
-  parallel snapshot files 91.1 s, append segments remove the rewrite
-  (SCALE.md round-6 section 2); round 7 extended the same discipline
-  to ``labels`` (previously an O(corpus) per-batch snapshot rewrite).
+  batch's delta segments under the atomic META pointer: full-snapshot
+  commits measured 120.7 s at 30x, parallel snapshot files 91.1 s;
+  append segments remove the rewrite (SCALE.md).
 - PROBE READ: ADAPTIVE. Below PRUNE_MIN_BYTES the accumulated store
   is a handful of parquet files and a full scan is cheaper than any
   pruning bookkeeping (measured ~1 s/batch of pure overhead against
@@ -83,12 +81,11 @@ Per-commit IO is batch-sized on BOTH sides now:
   grown via rebucket_neardup_state), a bucket directory holds a bounded row
   count, so probe READ IO ~ (batch's bucket count) x (bounded bucket
   size) + the few uncompacted deltas — batch-proportional, not
-  O(corpus) (measured: SCALE.md r7). Every row
+  O(corpus) (measured: SCALE.md). Every row
   carries its bucket, so the threshold crossing and the
   delta/compacted mix are invisible to readers. The CLUSTER MERGE's
-  label reads prune the same way since r8 (the r7 verdict's one
-  residual read-side term): the endpoint rep lookup reads the new
-  pairs' dbuckets, the losing-member scan reads the losing reps'
+  label reads prune the same way: the endpoint rep lookup reads the
+  new pairs' dbuckets, the losing-member scan reads the losing reps'
   cbuckets — per-batch labels read IO is touched-bucket-sized, with
   the exactness argument documented on _merge_label_delta.
 
@@ -111,15 +108,20 @@ identity, and compaction read-identity.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_trend_predictor_spark.functions.exact import stable_round
 from stock_trend_predictor_spark.operators import dedup as D
 from stock_trend_predictor_spark.operators.statestore import (
-    commit_state,
-    read_meta,
+    PRUNE_MIN_BYTES,
+    FoldLayout,
+    begin_fold,
+    bucket_expr,
+    bucket_filter,
+    commit_fold,
     read_state_table,
+    rebucket_fold,
 )
 from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 
@@ -130,33 +132,6 @@ from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 #: (atomic segment rewrite + pin update). Pinned per-fold in META's
 #: app dict.
 N_BAND_BUCKETS = 64
-
-#: probe reads switch from full-scan to bucket-pruned once a state
-#: table outgrows this. Below it the whole store is a few parquet
-#: files and pruning is pure overhead (two driver collects + one
-#: isin filter per batch measured ~1 s/batch at sf0.1 against a
-#: 2.5 MB index); above it the pruned read is the difference between
-#: batch-sized and corpus-sized probe IO. The LAYOUT is always
-#: bucketed — only the read strategy adapts.
-PRUNE_MIN_BYTES = 32 * 2**20
-
-
-def _state_bytes(state_dir: str, meta: dict | None, table: str) -> int:
-    """On-disk bytes of an append table's committed segments (local
-    metadata walk, no Spark job)."""
-    import os
-
-    if meta is None:
-        return 0
-    total = 0
-    for seg in meta.get("segments", {}).get(table, []):
-        for root, _, files in os.walk(os.path.join(state_dir, seg)):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    return total
 
 
 def doc_bands(docs: DataFrame) -> DataFrame:
@@ -178,72 +153,38 @@ def doc_bands(docs: DataFrame) -> DataFrame:
     )
 
 
-def _band_bucket(p: int) -> Column:
-    return F.pmod(F.xxhash64(F.col("band_id"), F.col("bkey")), F.lit(p))
+#: the label revision tables of the two label-merging folds (this one
+#: and semdedup_maintenance): the same rows under a by-doc and a
+#: by-cluster bucket (module docstring).
+LABEL_TABLES = {
+    "labels": ("dbucket", ("doc_id",)),
+    "labels_byc": ("cbucket", ("cluster",)),
+}
 
-
-def _doc_bucket(p: int) -> Column:
-    return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(p))
-
-
-def _cluster_bucket(p: int) -> Column:
-    return F.pmod(F.xxhash64(F.col("cluster")), F.lit(p))
-
-
-#: on-disk layout version of the neardup fold's state, stamped into
-#: META's app dict on every commit. v3 (r8) = v2's append segments +
-#: the labels table's dbucket/cbucket prune keys. Unstamped dirs are
-#: older layouts (pre-r7 snapshots without ``bucket``/``rev``
-#: columns; r7 append segments whose labels rows lack the prune
-#: keys) — either would crash obscurely mid-batch (unionByName on a
-#: missing column), so the fold refuses them explicitly instead
-#: (r7 advice: detect, don't crash).
-NEARDUP_FORMAT = 3
-
-
-def _check_fold_format(meta: dict | None) -> None:
-    """Fail loud on a state dir written by a different fold layout.
-    Legacy fingerprints: an explicit non-current ``neardup_format``
-    stamp; neardup tables committed as SNAPSHOTS (pre-r7); or append
-    segments without a stamp (r7 — its labels rows lack the v3
-    dbucket/cbucket prune keys)."""
-    if meta is None:
-        return
-    app = meta.get("app", {})
-    fmt = app.get("neardup_format")
-    if fmt is not None and int(fmt) != NEARDUP_FORMAT:
-        raise RuntimeError(
-            f"neardup state dir is fold format v{fmt}; this build "
-            f"reads v{NEARDUP_FORMAT} — re-fold the corpus (or keep "
-            f"running the matching build)"
-        )
-    legacy_snapshots = {"bands", "shingles", "labels", "pairs"} & set(
-        meta.get("tables", [])
-    )
-    has_segments = any(
-        t in meta.get("segments", {})
-        for t in ("bands", "shingles", "labels", "pairs")
-    )
-    if legacy_snapshots or (has_segments and fmt is None):
-        raise RuntimeError(
-            "neardup state dir uses a pre-v3 layout "
-            f"(snapshot tables {sorted(legacy_snapshots)} / "
-            "unstamped segments): its rows lack the columns this "
-            "fold reads ('bucket' on bands/shingles, 'rev' + "
-            "'dbucket'/'cbucket' on labels). Re-fold the corpus "
-            "into a fresh state dir — there is no in-place "
-            "migration for the unbucketed layouts."
-        )
-
-
-def _fold_bucket_count(meta: dict | None, requested: int) -> int:
-    """The fold's pinned P: the first commit's value wins for the
-    state dir's lifetime (old segments are bucketed under it; a
-    different P would silently mis-prune them). Lives in META's
-    ``app`` dict — zero Spark jobs to read."""
-    if meta is None:
-        return int(requested)
-    return int(meta.get("app", {}).get("n_band_buckets", requested))
+#: the fold's on-disk layout. Format v3 = append segments whose labels
+#: rows carry the dbucket/cbucket prune keys; an older dir (snapshot
+#: tables, or unstamped segments) lacks columns the fold reads, so it
+#: is refused instead of crashing mid-batch.
+NEARDUP_LAYOUT = FoldLayout(
+    name="neardup",
+    tables={
+        "bands": ("bucket", ("band_id", "bkey")),
+        "shingles": ("bucket", ("doc_id",)),
+        "pairs": None,
+        **LABEL_TABLES,
+    },
+    format_key="neardup_format",
+    version=3,
+    p_key="n_band_buckets",
+    p_default=N_BAND_BUCKETS,
+    legacy=(
+        "uses a pre-v3 layout (snapshot tables or unstamped "
+        "segments): its rows lack the columns this fold reads "
+        "('bucket' on bands/shingles, 'rev' + 'dbucket'/'cbucket' on "
+        "labels)"
+    ),
+    remedy="re-fold the corpus into a fresh state dir",
+)
 
 
 def _probe_candidates(
@@ -275,8 +216,7 @@ def _probe_candidates(
             )
         )
         idx = all_bands.join(cells, ["band_id", "bkey"]).withColumn(
-            "_cell",
-            F.pmod(F.xxhash64("doc_id"), F.col("_cells")).cast("int"),
+            "_cell", bucket_expr(["doc_id"], F.col("_cells")).cast("int")
         )
         probe = (
             new_bands.join(cells, ["band_id", "bkey"])
@@ -347,10 +287,10 @@ def _merge_label_delta(
     equals min over all member ids — inductively identical to the
     one-shot CC (law-tested in tests/test_neardup_stream.py).
 
-    Both state reads PRUNE once the labels table outgrows
+    Each state read PRUNES once its table outgrows
     ``prune_min_bytes`` (the same adaptive rule as the band/shingle
-    probes — below it the two driver collects cost more than the
-    full scan they'd save):
+    probes — below it the driver collect costs more than the full
+    scan it would save):
 
     - the ENDPOINT rep lookup reads only the new pairs' doc buckets
       (``dbucket`` on the canonical ``labels`` copy): every revision
@@ -372,9 +312,9 @@ def _merge_label_delta(
       one-shot CC after every batch.)
 
     Per-batch labels READ IO is therefore touched-bucket-sized, not
-    O(corpus) — the r7 verdict's one residual read-side term.
+    O(corpus).
 
-    Checkpoint hygiene (r8 ADVICE): the helper's own eager frames
+    Checkpoint hygiene: the helper's own eager frames
     (rep edges, the CC result) are released before return; the
     ``merged`` frame the RETURNED delta still references lazily is
     appended to ``track`` for the caller to release once the delta is
@@ -389,21 +329,11 @@ def _merge_label_delta(
 
     rev = F.lit(int(batch_id)).alias("rev")
     fresh = new.select("doc_id", F.col("doc_id").alias("cluster"))
-    prune = _state_bytes(state_dir, meta, "labels") >= prune_min_bytes
-    if prune:
-        ep_filter = {
-            "dbucket": [
-                r["b"]
-                for r in new_pairs.select(
-                    F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-                )
-                .select(_doc_bucket(p).alias("b"))
-                .distinct()
-                .collect()
-            ]
-        }
-    else:
-        ep_filter = None
+    ep_filter = bucket_filter(
+        NEARDUP_LAYOUT, "labels", p,
+        new_pairs.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id")),
+        state_dir, meta, prune_min_bytes,
+    )
     prev_ep = _labels_latest(spark, state_dir, ep_filter)
     base = fresh if prev_ep is None else prev_ep.unionByName(fresh)
     np_ = new_pairs.select("doc_a", "doc_b")
@@ -456,19 +386,10 @@ def _merge_label_delta(
     )
     if prev_ep is None:
         return fresh_rows
-    if prune:
-        mem_filter = {
-            "cbucket": [
-                r["b"]
-                for r in losing.select(
-                    _cluster_bucket(p).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-        }
-    else:
-        mem_filter = None
+    mem_filter = bucket_filter(
+        NEARDUP_LAYOUT, "labels_byc", p, losing, state_dir, meta,
+        prune_min_bytes,
+    )
     prev_mem = _labels_latest(
         spark, state_dir, mem_filter, table="labels_byc"
     )
@@ -516,19 +437,14 @@ def update_neardup_state(
     content-digest exact dedup before the sink); an inline anti-join
     against the accumulated shingle store would cost an O(corpus)
     state read per batch, defeating the append-only IO discipline."""
-    meta = read_meta(state_dir)
-    _check_fold_format(meta)
-    if (
-        meta is not None
-        and meta.get("last_batch_id") is not None
-        and batch_id <= meta["last_batch_id"]
-    ):
-        return  # replay: commit_state would skip anyway; skip the work
+    entry = begin_fold(NEARDUP_LAYOUT, state_dir, batch_id, n_band_buckets)
+    if entry is None:
+        return
+    meta, p = entry
     from stock_trend_predictor_spark.operators.checkpoints import (
         job_phase,
     )
 
-    p = _fold_bucket_count(meta, n_band_buckets)
     cps: list[DataFrame] = []  # eager frames to release post-commit
     with job_phase(spark, f"ndfold{batch_id}:batch"):
         new = batch.select("doc_id", "hs").localCheckpoint(eager=True)
@@ -538,25 +454,19 @@ def update_neardup_state(
     # lazy each re-runs the 64-permutation signature fold over the
     # batch (measured 3x the r6 fold wall at sf0.1)
     with job_phase(spark, f"ndfold{batch_id}:bands"):
-        new_bands = (
-            doc_bands(new)
-            .withColumn("bucket", _band_bucket(p))
-            .localCheckpoint(eager=True)
-        )
+        new_bands = NEARDUP_LAYOUT.with_bucket(
+            "bands", doc_bands(new), p
+        ).localCheckpoint(eager=True)
     cps.append(new_bands)
-    new_sh = new.withColumn("bucket", _doc_bucket(p))
+    new_sh = NEARDUP_LAYOUT.with_bucket("shingles", new, p)
     # ADAPTIVE pruned probe read: once the band index outgrows
     # PRUNE_MIN_BYTES, read only the bucket directories this batch's
     # band keys hash into (<= p values, driver-side set is tiny);
     # below it a full scan is cheaper than the collect + filter.
-    if _state_bytes(state_dir, meta, "bands") >= prune_min_bytes:
-        batch_buckets = [
-            r["bucket"]
-            for r in new_bands.select("bucket").distinct().collect()
-        ]
-        band_filter = {"bucket": batch_buckets}
-    else:
-        band_filter = None
+    band_filter = bucket_filter(
+        NEARDUP_LAYOUT, "bands", p, new_bands, state_dir, meta,
+        prune_min_bytes,
+    )
     prev_bands = read_state_table(
         spark, state_dir, "bands", partition_filter=band_filter
     )
@@ -576,20 +486,11 @@ def update_neardup_state(
     cps.append(cand)
     # ADAPTIVE pruned verify read: only the candidates' doc buckets
     # once the shingle store is big enough for pruning to pay
-    if _state_bytes(state_dir, meta, "shingles") >= prune_min_bytes:
-        cand_docs = cand.select(
-            F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-        )
-        sh_filter = {
-            "bucket": [
-                r["b"]
-                for r in cand_docs.select(_doc_bucket(p).alias("b"))
-                .distinct()
-                .collect()
-            ]
-        }
-    else:
-        sh_filter = None
+    sh_filter = bucket_filter(
+        NEARDUP_LAYOUT, "shingles", p,
+        cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id")),
+        state_dir, meta, prune_min_bytes,
+    )
     prev_sh = read_state_table(
         spark, state_dir, "shingles", partition_filter=sh_filter
     )
@@ -643,56 +544,24 @@ def update_neardup_state(
                 track=cps,
             ).localCheckpoint(eager=True)
         cps.append(delta)
-        appends["labels"] = delta.withColumn("dbucket", _doc_bucket(p))
-        appends["labels_byc"] = delta.withColumn(
-            "cbucket", _cluster_bucket(p)
-        )
+        for t in LABEL_TABLES:
+            appends[t] = NEARDUP_LAYOUT.with_bucket(t, delta, p)
 
-    # ALL data tables are append-only by construction (module
-    # docstring: bands/shingles/pairs never change after discovery;
-    # labels are latest-wins revisions) — each commit writes only
-    # THIS batch's delta segments, so per-commit write IO is
-    # batch-sized, not corpus-sized. bands/shingles segments are
-    # directory-partitioned on their hash bucket for the pruned
-    # probe reads above. files_per_table caps write parallelism for
-    # the unpartitioned tables (coalesce never raises the partition
-    # count, so tiny batches still land as single files).
-    # per-batch deltas land UNPARTITIONED (LSM-style hot writes: a
-    # 64-dir partitioned write of a batch-sized delta measured ~2x
-    # the plain write for nothing); compaction below rewrites the
-    # accumulated bands/shingles into the BUCKETED layout partition
-    # pruning needs — the statestore reads stay correct across the
-    # mix (bucket is a data column in deltas, a directory in the
-    # compacted segment).
-    commit_state(
-        state_dir,
-        {},
-        batch_id=batch_id,
-        files_per_table=8,
-        appends=appends,
-        app_meta={
-            "n_band_buckets": int(p),
-            "neardup_format": NEARDUP_FORMAT,
-        },
+    # ALL data tables are append-only (module docstring), so each
+    # commit writes only THIS batch's delta segments: per-commit write
+    # IO is batch-sized. The deltas land UNPARTITIONED (LSM-style hot
+    # writes: a 64-dir partitioned write of a batch-sized delta
+    # measured ~2x the plain write for nothing); compaction rewrites
+    # the accumulated tables into the bucketed layout partition
+    # pruning needs, and reads stay correct across the mix (bucket is
+    # a data column in deltas, a directory in the compacted segment).
+    commit_fold(
+        spark, NEARDUP_LAYOUT, state_dir, batch_id, appends, p,
+        compact_every,
     )
-    if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-        from stock_trend_predictor_spark.operators.statestore import (
-            compact_append_table,
-        )
-
-        rp_by_table = {
-            "bands": ["bucket"],
-            "shingles": ["bucket"],
-            "labels": ["dbucket"],
-            "labels_byc": ["cbucket"],
-        }
-        for t in appends:
-            compact_append_table(
-                spark, state_dir, t, repartition_by=rp_by_table.get(t)
-            )
     # commit materialized every consumer — free this batch's eager
     # blocks so a continuous sink's storage stays batch-bounded
-    # instead of growing one checkpoint set per fold (r8 ADVICE)
+    # instead of growing one checkpoint set per fold
     from stock_trend_predictor_spark.operators.checkpoints import (
         release_local_checkpoints,
     )
@@ -705,53 +574,12 @@ def rebucket_neardup_state(
 ) -> bool:
     """Grow (or shrink) the fold's on-disk bucket count to ``new_p``
     — the maintenance move for a fold whose corpus outgrew the P its
-    first commit pinned. Every bucket-derived table rewrites together
-    (bands under ``pmod(xxhash64(band_id, bkey), new_p)``, shingles
-    and the labels copy under ``pmod(xxhash64(doc_id), new_p)``, the
-    labels_byc index under ``pmod(xxhash64(cluster), new_p)``) and the
-    ``n_band_buckets`` pin updates in the SAME atomic META swap
-    (statestore.rebucket_append_table), so a pruned probe can never
-    plan against a mixed layout: pre-swap reads see old-P segments
-    under the old pin, post-swap reads see new-P segments under the
-    new pin, and a crash in between leaves the old state intact.
-    Post-re-bucket probes find the IDENTICAL pair set (law-tested in
-    tests/test_neardup_stream.py). Returns False before the first
-    commit. Run it between batches — the fold is single-writer, and
-    the next update_neardup_state reads the new pin from META."""
-    from stock_trend_predictor_spark.operators.statestore import (
-        rebucket_append_table,
-    )
-
-    meta = read_meta(state_dir)
-    _check_fold_format(meta)
-    new_p = int(new_p)
-    if new_p < 1:
-        raise ValueError(f"bucket count must be >= 1, got {new_p}")
-    return rebucket_append_table(
-        spark,
-        state_dir,
-        recompute={
-            "bands": lambda df: df.withColumn(
-                "bucket", _band_bucket(new_p)
-            ),
-            "shingles": lambda df: df.withColumn(
-                "bucket", _doc_bucket(new_p)
-            ),
-            "labels": lambda df: df.withColumn(
-                "dbucket", _doc_bucket(new_p)
-            ),
-            "labels_byc": lambda df: df.withColumn(
-                "cbucket", _cluster_bucket(new_p)
-            ),
-        },
-        partition_by={
-            "bands": ["bucket"],
-            "shingles": ["bucket"],
-            "labels": ["dbucket"],
-            "labels_byc": ["cbucket"],
-        },
-        app_updates={"n_band_buckets": new_p},
-    )
+    first commit pinned (statestore.rebucket_fold: every bucketed
+    table of :data:`NEARDUP_LAYOUT` rewrites and the pin updates in
+    one META swap). Post-re-bucket probes find the IDENTICAL pair set
+    (law-tested in tests/test_neardup_stream.py). Returns False
+    before the first commit."""
+    return rebucket_fold(spark, NEARDUP_LAYOUT, state_dir, new_p)
 
 
 def read_neardup_pairs(

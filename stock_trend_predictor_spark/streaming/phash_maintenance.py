@@ -33,6 +33,10 @@ State = three APPEND tables (operators/statestore.py):
   so the union over batches equals the one-shot pair set, and the
   Hamming distance is a pure function of the two stored hashes.
 
+The tables, their bucket columns, the format stamp and the pin are
+declared once, in :data:`PHASH_LAYOUT` (operators/statestore.py,
+fold layouts).
+
 Per batch (update_phash_state): band the batch's hashes once; probe
 new-vs-(index ∪ batch) through the capped band join; verify at
 bit_count(xor) <= 2 over the PRUNED phash read (candidates' doc
@@ -61,17 +65,17 @@ from stock_trend_predictor_spark.operators.checkpoints import (
     release_local_checkpoints,
 )
 from stock_trend_predictor_spark.operators.statestore import (
-    commit_state,
-    read_meta,
+    PRUNE_MIN_BYTES,
+    FoldLayout,
+    begin_fold,
+    bucket_filter,
+    commit_fold,
     read_state_table,
+    rebucket_fold,
 )
 from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 from stock_trend_predictor_spark.streaming.neardup_maintenance import (
-    PRUNE_MIN_BYTES,
-    _band_bucket,
-    _doc_bucket,
     _probe_candidates,
-    _state_bytes,
 )
 
 #: default on-disk hash-bucket count (bands on (band_id, bkey),
@@ -82,29 +86,19 @@ N_PHASH_BUCKETS = 64
 #: verified-pair Hamming ceiling — dedup_multimodal_phash's 2.
 MAX_HAMMING = 2
 
-#: on-disk layout version, stamped on every commit.
-PHASH_FORMAT = 1
-
-
-def _check_phash_format(meta: dict | None) -> None:
-    if meta is None:
-        return
-    app = meta.get("app", {})
-    fmt = app.get("phash_format")
-    if fmt is not None and int(fmt) != PHASH_FORMAT:
-        raise RuntimeError(
-            f"phash state dir is fold format v{fmt}; this build reads "
-            f"v{PHASH_FORMAT} — re-fold into a fresh dir"
-        )
-    if fmt is None and any(
-        t in meta.get("segments", {})
-        for t in ("pbands", "phashes", "pairs")
-    ):
-        raise RuntimeError(
-            "phash state dir has unstamped segments (written by a "
-            "different fold or a pre-release layout) — re-fold into "
-            "a fresh dir"
-        )
+#: the fold's on-disk layout (module docstring).
+PHASH_LAYOUT = FoldLayout(
+    name="phash",
+    tables={
+        "pbands": ("bucket", ("band_id", "bkey")),
+        "phashes": ("bucket", ("doc_id",)),
+        "pairs": None,
+    },
+    format_key="phash_format",
+    version=1,
+    p_key="n_phash_buckets",
+    p_default=N_PHASH_BUCKETS,
+)
 
 
 def phash_bands(hashed: DataFrame) -> DataFrame:
@@ -153,42 +147,26 @@ def update_phash_state(
     (neardup_maintenance._probe_candidates — pair-set identity at any
     cap); ``compact_every=N`` runs the statestore OPTIMIZE after each
     Nth batch."""
-    meta = read_meta(state_dir)
-    _check_phash_format(meta)
-    if (
-        meta is not None
-        and meta.get("last_batch_id") is not None
-        and batch_id <= meta["last_batch_id"]
-    ):
+    entry = begin_fold(PHASH_LAYOUT, state_dir, batch_id, n_buckets)
+    if entry is None:
         return
-    p = (
-        int(meta.get("app", {}).get("n_phash_buckets", n_buckets))
-        if meta
-        else int(n_buckets)
-    )
+    meta, p = entry
     cps: list[DataFrame] = []  # eager frames to release post-commit
     new = batch.select("doc_id", "phash").localCheckpoint(eager=True)
     cps.append(new)
     # banding feeds the bucket-set collect, the probe join, and the
     # segment write — eager once (the fold-family discipline)
-    new_bands = (
-        phash_bands(new)
-        .withColumn("bucket", _band_bucket(p))
-        .localCheckpoint(eager=True)
-    )
+    new_bands = PHASH_LAYOUT.with_bucket(
+        "pbands", phash_bands(new), p
+    ).localCheckpoint(eager=True)
     cps.append(new_bands)
-    new_ph = new.withColumn("bucket", _doc_bucket(p))
+    new_ph = PHASH_LAYOUT.with_bucket("phashes", new, p)
     # ADAPTIVE pruned probe read: only the batch's band buckets once
     # the index outgrows the threshold
-    if _state_bytes(state_dir, meta, "pbands") >= prune_min_bytes:
-        band_filter = {
-            "bucket": [
-                r["bucket"]
-                for r in new_bands.select("bucket").distinct().collect()
-            ]
-        }
-    else:
-        band_filter = None
+    band_filter = bucket_filter(
+        PHASH_LAYOUT, "pbands", p, new_bands, state_dir, meta,
+        prune_min_bytes,
+    )
     prev_bands = read_state_table(
         spark, state_dir, "pbands", partition_filter=band_filter
     )
@@ -206,20 +184,11 @@ def update_phash_state(
     ).localCheckpoint(eager=True)
     cps.append(cand)
     # ADAPTIVE pruned verify read: only the candidates' doc buckets
-    if _state_bytes(state_dir, meta, "phashes") >= prune_min_bytes:
-        ph_filter = {
-            "bucket": [
-                r["b"]
-                for r in cand.select(
-                    F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-                )
-                .select(_doc_bucket(p).alias("b"))
-                .distinct()
-                .collect()
-            ]
-        }
-    else:
-        ph_filter = None
+    ph_filter = bucket_filter(
+        PHASH_LAYOUT, "phashes", p,
+        cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id")),
+        state_dir, meta, prune_min_bytes,
+    )
     prev_ph = read_state_table(
         spark, state_dir, "phashes", partition_filter=ph_filter
     )
@@ -244,66 +213,27 @@ def update_phash_state(
             hamming.cast("int").alias("hamming"),
         )
     )
-    commit_state(
+    commit_fold(
+        spark,
+        PHASH_LAYOUT,
         state_dir,
-        {},
-        batch_id=batch_id,
-        files_per_table=8,
-        appends={
-            "pbands": new_bands,
-            "phashes": new_ph,
-            "pairs": new_pairs,
-        },
-        app_meta={
-            "n_phash_buckets": int(p),
-            "phash_format": PHASH_FORMAT,
-        },
+        batch_id,
+        {"pbands": new_bands, "phashes": new_ph, "pairs": new_pairs},
+        p,
+        compact_every,
     )
-    if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-        from stock_trend_predictor_spark.operators.statestore import (
-            compact_append_table,
-        )
-
-        for t, cols in (
-            ("pbands", ["bucket"]),
-            ("phashes", ["bucket"]),
-            ("pairs", None),
-        ):
-            compact_append_table(spark, state_dir, t, repartition_by=cols)
     # free this batch's eager blocks — continuous sinks hold
-    # batch-bounded storage (the family discipline since r9)
+    # batch-bounded storage
     release_local_checkpoints(*cps)
 
 
 def rebucket_phash_state(
     spark: SparkSession, state_dir: str, new_p: int
 ) -> bool:
-    """Grow (or shrink) the fold's pinned bucket count — the family's
-    sanctioned pin-override: both bucket-derived tables rewrite under
-    the new P and ``n_phash_buckets`` re-pins in ONE atomic META
-    swap (statestore.rebucket_append_table)."""
-    from stock_trend_predictor_spark.operators.statestore import (
-        rebucket_append_table,
-    )
-
-    _check_phash_format(read_meta(state_dir))
-    new_p = int(new_p)
-    if new_p < 1:
-        raise ValueError(f"bucket count must be >= 1, got {new_p}")
-    return rebucket_append_table(
-        spark,
-        state_dir,
-        recompute={
-            "pbands": lambda df: df.withColumn(
-                "bucket", _band_bucket(new_p)
-            ),
-            "phashes": lambda df: df.withColumn(
-                "bucket", _doc_bucket(new_p)
-            ),
-        },
-        partition_by={"pbands": ["bucket"], "phashes": ["bucket"]},
-        app_updates={"n_phash_buckets": new_p},
-    )
+    """Grow (or shrink) the fold's pinned bucket count
+    (statestore.rebucket_fold): both bucketed tables rewrite under the
+    new P and ``n_phash_buckets`` re-pins in ONE atomic META swap."""
+    return rebucket_fold(spark, PHASH_LAYOUT, state_dir, new_p)
 
 
 def read_phash_pairs(

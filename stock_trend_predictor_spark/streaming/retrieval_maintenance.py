@@ -30,6 +30,10 @@ State = three APPEND tables (operators/statestore.py):
   so avgdl == the one-shot's avg(dl) exactly (sum of per-batch
   bigint sums / total count — no float accumulation order).
 
+The tables, their bucket columns, the format stamp and the pin are
+declared once, in :data:`RETRIEVAL_LAYOUT` (operators/statestore.py,
+fold layouts).
+
 Per batch (update_retrieval_state): tokenize the batch once,
 aggregate (token, doc_id) term frequencies, append all three deltas
 in one atomic META-swap commit. Replayed batch ids skip before any
@@ -54,60 +58,47 @@ batch-bounded, rebucket identity, and the format guard.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_trend_predictor_spark.operators.statestore import (
-    commit_state,
+    PRUNE_MIN_BYTES,
+    FoldLayout,
+    _state_bytes,
+    begin_fold,
+    bucket_filter,
+    check_fold_format,
+    commit_fold,
+    pinned_bucket_count,
     read_meta,
     read_state_table,
+    rebucket_fold,
 )
 from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
-from stock_trend_predictor_spark.streaming.neardup_maintenance import (
-    PRUNE_MIN_BYTES,
-    _state_bytes,
-)
 
 #: default on-disk hash-bucket count (postings on token, docstats on
 #: doc) — pinned per fold in META's app dict; grow via
 #: :func:`rebucket_retrieval_state`.
 N_INDEX_BUCKETS = 64
 
-#: on-disk layout version, stamped on every commit.
-RETRIEVAL_FORMAT = 1
-
 #: BM25 constants — bm25_doc_search's (k1, b).
 K1 = 1.2
 B = 0.75
 
 
-def _t_bucket(p: int, col: str = "token") -> Column:
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(p))
-
-
-def _d_bucket(p: int, col: str = "doc_id") -> Column:
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(p))
-
-
-def _check_retrieval_format(meta: dict | None) -> None:
-    if meta is None:
-        return
-    app = meta.get("app", {})
-    fmt = app.get("retrieval_format")
-    if fmt is not None and int(fmt) != RETRIEVAL_FORMAT:
-        raise RuntimeError(
-            f"retrieval state dir is fold format v{fmt}; this build "
-            f"reads v{RETRIEVAL_FORMAT} — re-fold into a fresh dir"
-        )
-    if fmt is None and any(
-        t in meta.get("segments", {})
-        for t in ("postings", "docstats", "stats")
-    ):
-        raise RuntimeError(
-            "retrieval state dir has unstamped segments (written by a "
-            "different fold or a pre-release layout) — re-fold into a "
-            "fresh dir"
-        )
+#: the fold's on-disk layout (module docstring).
+RETRIEVAL_LAYOUT = FoldLayout(
+    name="retrieval",
+    tables={
+        "postings": ("tbucket", ("token",)),
+        "docstats": ("dbucket", ("doc_id",)),
+        "stats": None,
+    },
+    format_key="retrieval_format",
+    version=1,
+    p_key="n_index_buckets",
+    p_default=N_INDEX_BUCKETS,
+)
 
 
 def update_retrieval_state(
@@ -122,19 +113,10 @@ def update_retrieval_state(
     maintained index. Idempotent: replayed batch ids skip before any
     compute. PRECONDITION (the fold-family contract): each doc_id
     arrives in exactly one batch — re-crawls dedupe upstream."""
-    meta = read_meta(state_dir)
-    _check_retrieval_format(meta)
-    if (
-        meta is not None
-        and meta.get("last_batch_id") is not None
-        and batch_id <= meta["last_batch_id"]
-    ):
+    entry = begin_fold(RETRIEVAL_LAYOUT, state_dir, batch_id, n_buckets)
+    if entry is None:
         return
-    p = (
-        int(meta.get("app", {}).get("n_index_buckets", n_buckets))
-        if meta
-        else int(n_buckets)
-    )
+    _, p = entry
     # tokenize ONCE; postings + docstats + the stats delta all derive
     # from it (eager so the explode never reruns)
     toks = (
@@ -153,32 +135,19 @@ def update_retrieval_state(
         F.count(F.lit(1)).cast("bigint").alias("n_delta"),
         F.sum("dl").cast("bigint").alias("dl_delta"),
     )
-    commit_state(
+    commit_fold(
+        spark,
+        RETRIEVAL_LAYOUT,
         state_dir,
-        {},
-        batch_id=batch_id,
-        files_per_table=8,
-        appends={
-            "postings": postings.withColumn("tbucket", _t_bucket(p)),
-            "docstats": docstats.withColumn("dbucket", _d_bucket(p)),
+        batch_id,
+        {
+            "postings": RETRIEVAL_LAYOUT.with_bucket("postings", postings, p),
+            "docstats": RETRIEVAL_LAYOUT.with_bucket("docstats", docstats, p),
             "stats": stats,
         },
-        app_meta={
-            "n_index_buckets": int(p),
-            "retrieval_format": RETRIEVAL_FORMAT,
-        },
+        p,
+        compact_every,
     )
-    if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-        from stock_trend_predictor_spark.operators.statestore import (
-            compact_append_table,
-        )
-
-        for t, cols in (
-            ("postings", ["tbucket"]),
-            ("docstats", ["dbucket"]),
-            ("stats", None),
-        ):
-            compact_append_table(spark, state_dir, t, repartition_by=cols)
     # the commit materialized all three deltas — free the tokenize
     # checkpoint so a continuous sink's storage stays batch-bounded
     from stock_trend_predictor_spark.operators.checkpoints import (
@@ -191,31 +160,11 @@ def update_retrieval_state(
 def rebucket_retrieval_state(
     spark: SparkSession, state_dir: str, new_p: int
 ) -> bool:
-    """Grow (or shrink) the fold's pinned bucket count — the family's
-    sanctioned pin-override: postings and docstats rewrite under the
-    new P and ``n_index_buckets`` re-pins in ONE atomic META swap."""
-    from stock_trend_predictor_spark.operators.statestore import (
-        rebucket_append_table,
-    )
-
-    _check_retrieval_format(read_meta(state_dir))
-    new_p = int(new_p)
-    if new_p < 1:
-        raise ValueError(f"bucket count must be >= 1, got {new_p}")
-    return rebucket_append_table(
-        spark,
-        state_dir,
-        recompute={
-            "postings": lambda df: df.withColumn(
-                "tbucket", _t_bucket(new_p)
-            ),
-            "docstats": lambda df: df.withColumn(
-                "dbucket", _d_bucket(new_p)
-            ),
-        },
-        partition_by={"postings": ["tbucket"], "docstats": ["dbucket"]},
-        app_updates={"n_index_buckets": new_p},
-    )
+    """Grow (or shrink) the fold's pinned bucket count
+    (statestore.rebucket_fold): postings and docstats rewrite under
+    the new P and ``n_index_buckets`` re-pins in ONE atomic META
+    swap."""
+    return rebucket_fold(spark, RETRIEVAL_LAYOUT, state_dir, new_p)
 
 
 def read_bm25_search(
@@ -240,27 +189,17 @@ def read_bm25_search(
     10^11 docs any real query matches >> top_k). None before the
     first commit."""
     meta = read_meta(state_dir)
-    _check_retrieval_format(meta)
+    check_fold_format(RETRIEVAL_LAYOUT, meta)
     if meta is None:
         return None
-    p = int(meta.get("app", {}).get("n_index_buckets", N_INDEX_BUCKETS))
-    if _state_bytes(state_dir, meta, "postings") >= prune_min_bytes:
-        # one tiny driver job for ALL query terms (xxhash64 is
-        # JVM-side, so the bucket ids come from a |terms|-row frame)
-        buckets = sorted(
-            {
-                r["b"]
-                for r in spark.createDataFrame(
-                    [(t,) for t in terms], "token string"
-                )
-                .select(_t_bucket(p).alias("b"))
-                .distinct()
-                .collect()
-            }
-        )
-        t_filter = {"tbucket": buckets}
-    else:
-        t_filter = None
+    p = pinned_bucket_count(RETRIEVAL_LAYOUT, meta)
+    # one tiny driver job for ALL query terms (xxhash64 is JVM-side,
+    # so the bucket ids come from a |terms|-row frame)
+    t_filter = bucket_filter(
+        RETRIEVAL_LAYOUT, "postings", p,
+        spark.createDataFrame([(t,) for t in terms], "token string"),
+        state_dir, meta, prune_min_bytes,
+    )
     postings = read_state_table(
         spark, state_dir, "postings", partition_filter=t_filter
     )
@@ -275,7 +214,7 @@ def read_bm25_search(
         # exact (docstring) — never a doc-id-sized collect
         row = hits.agg(
             F.countDistinct("doc_id").alias("n"),
-            F.collect_set(_d_bucket(p, "doc_id")).alias("bs"),
+            F.collect_set(RETRIEVAL_LAYOUT.bucket("docstats", p)).alias("bs"),
         ).collect()[0]
         d_filter = (
             {"dbucket": sorted(row["bs"])}

@@ -35,6 +35,10 @@ State = three APPEND tables (operators/statestore.py):
 - ``labels_byc`` (doc_id, cluster, rev, cbucket) — the same rows under
   the by-cluster prune key for losing-member scans.
 
+The tables, their bucket columns, the format stamp and the pin are
+declared once, in :data:`SEMDEDUP_LAYOUT` (operators/statestore.py,
+fold layouts).
+
 Per batch: assign under the frozen centroids; pruned read of the
 touched cells' members; score NEW x (existing ∪ batch) cell-mate
 pairs through the capped join; edges = exact cosine >= threshold,
@@ -79,21 +83,21 @@ from pyspark.sql import functions as F
 
 from stock_trend_predictor_spark.operators.ivf import CELL_CAP
 from stock_trend_predictor_spark.operators.statestore import (
-    commit_state,
-    read_meta,
+    PRUNE_MIN_BYTES,
+    FoldLayout,
+    begin_fold,
+    bucket_filter,
+    commit_fold,
     read_state_table,
+    rebucket_fold,
 )
 from stock_trend_predictor_spark.streaming.ingest import start_foreach_batch
 from stock_trend_predictor_spark.streaming.knngraph_maintenance import (
-    _cid_bucket,
     _scored_new_vs_all,
 )
 from stock_trend_predictor_spark.streaming.neardup_maintenance import (
-    PRUNE_MIN_BYTES,
-    _cluster_bucket,
-    _doc_bucket,
+    LABEL_TABLES,
     _merge_label_delta,
-    _state_bytes,
 )
 
 #: exact-cosine edge threshold — semdedup_keep_decision's 0.35
@@ -106,30 +110,16 @@ SEM_COS_THRESHOLD = 0.35
 #: :func:`rebucket_semdedup_state` (the sanctioned override).
 N_SEM_BUCKETS = 64
 
-#: on-disk layout version, stamped on every commit (the fold-family
-#: discipline: refuse a mismatched layout explicitly).
-SEMDEDUP_FORMAT = 1
-
-
-def _check_sem_format(meta: dict | None) -> None:
-    if meta is None:
-        return
-    app = meta.get("app", {})
-    fmt = app.get("semdedup_format")
-    if fmt is not None and int(fmt) != SEMDEDUP_FORMAT:
-        raise RuntimeError(
-            f"semdedup state dir is fold format v{fmt}; this build "
-            f"reads v{SEMDEDUP_FORMAT} — re-fold into a fresh dir"
-        )
-    if fmt is None and any(
-        t in meta.get("segments", {})
-        for t in ("members", "labels", "labels_byc")
-    ):
-        raise RuntimeError(
-            "semdedup state dir has unstamped segments (written by a "
-            "different fold or a pre-release layout) — re-fold into a "
-            "fresh dir"
-        )
+#: the fold's on-disk layout: the kNN-graph fold's members table plus
+#: the near-dup fold's two label tables.
+SEMDEDUP_LAYOUT = FoldLayout(
+    name="semdedup",
+    tables={"members": ("bucket", ("cid",)), **LABEL_TABLES},
+    format_key="semdedup_format",
+    version=1,
+    p_key="n_sem_buckets",
+    p_default=N_SEM_BUCKETS,
+)
 
 
 def update_semdedup_state(
@@ -156,19 +146,10 @@ def update_semdedup_state(
     )
     from stock_trend_predictor_spark.operators.similarity import l2norm
 
-    meta = read_meta(state_dir)
-    _check_sem_format(meta)
-    if (
-        meta is not None
-        and meta.get("last_batch_id") is not None
-        and batch_id <= meta["last_batch_id"]
-    ):
+    entry = begin_fold(SEMDEDUP_LAYOUT, state_dir, batch_id, n_buckets)
+    if entry is None:
         return
-    p = (
-        int(meta.get("app", {}).get("n_sem_buckets", n_buckets))
-        if meta
-        else int(n_buckets)
-    )
+    meta, p = entry
     from stock_trend_predictor_spark.operators.checkpoints import (
         job_phase,
     )
@@ -187,28 +168,21 @@ def update_semdedup_state(
     cps.append(new_m)
     # ADAPTIVE pruned membership read: only the touched cells' buckets
     # once the members table outgrows the threshold
-    if _state_bytes(state_dir, meta, "members") >= prune_min_bytes:
-        mem_filter = {
-            "bucket": [
-                r["b"]
-                for r in new_m.select(_cid_bucket(p).alias("b"))
-                .distinct()
-                .collect()
-            ]
-        }
-    else:
-        mem_filter = None
+    mem_filter = bucket_filter(
+        SEMDEDUP_LAYOUT, "members", p, new_m, state_dir, meta,
+        prune_min_bytes,
+    )
     prev_m = read_state_table(
         spark, state_dir, "members", partition_filter=mem_filter
     )
     if prev_m is not None:
         # the pruned read admits whole buckets; restrict to the
         # touched cells themselves (broadcast: batch-sized set).
-        # Checkpoint the OLD side only (r11 ADVICE, mirrored from the
-        # kNN fold): the scoring join's two consumers (cell counts +
-        # index side) then read a lazy union of two checkpointed
-        # frames — the touched-bucket state read still runs once, and
-        # new_m's rows are no longer stored twice.
+        # Checkpoint the OLD side only (as the kNN fold does): the
+        # scoring join's two consumers (cell counts + index side) then
+        # read a lazy union of two checkpointed frames — the
+        # touched-bucket state read still runs once, and new_m's rows
+        # are not stored twice.
         touched_cids = new_m.select("cid").distinct()
         with job_phase(spark, f"semfold{batch_id}:stateread"):
             old_m = (
@@ -259,35 +233,24 @@ def update_semdedup_state(
             track=cps,
         ).localCheckpoint(eager=True)
     cps.append(delta)
-    commit_state(
+    commit_fold(
+        spark,
+        SEMDEDUP_LAYOUT,
         state_dir,
-        {},
-        batch_id=batch_id,
-        files_per_table=8,
-        appends={
-            "members": new_m.withColumn("bucket", _cid_bucket(p)),
-            "labels": delta.withColumn("dbucket", _doc_bucket(p)),
-            "labels_byc": delta.withColumn("cbucket", _cluster_bucket(p)),
+        batch_id,
+        {
+            "members": SEMDEDUP_LAYOUT.with_bucket("members", new_m, p),
+            **{
+                t: SEMDEDUP_LAYOUT.with_bucket(t, delta, p)
+                for t in LABEL_TABLES
+            },
         },
-        app_meta={
-            "n_sem_buckets": int(p),
-            "semdedup_format": SEMDEDUP_FORMAT,
-        },
+        p,
+        compact_every,
     )
-    if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-        from stock_trend_predictor_spark.operators.statestore import (
-            compact_append_table,
-        )
-
-        for t, cols in (
-            ("members", ["bucket"]),
-            ("labels", ["dbucket"]),
-            ("labels_byc", ["cbucket"]),
-        ):
-            compact_append_table(spark, state_dir, t, repartition_by=cols)
     # free this batch's eager blocks — a continuous sink must hold
-    # batch-bounded storage, not one checkpoint set per fold (r8
-    # ADVICE: six 30x builds OOM'd a 16g JVM before this release)
+    # batch-bounded storage, not one checkpoint set per fold (six 30x
+    # builds OOM'd a 16g JVM without it)
     from stock_trend_predictor_spark.operators.checkpoints import (
         release_local_checkpoints,
     )
@@ -298,40 +261,12 @@ def update_semdedup_state(
 def rebucket_semdedup_state(
     spark: SparkSession, state_dir: str, new_p: int
 ) -> bool:
-    """Grow (or shrink) the fold's pinned bucket count — the
-    near-dup fold's sanctioned pin-override pattern: every
-    bucket-derived table rewrites under the new P and ``n_sem_buckets``
-    re-pins in ONE atomic META swap (post-re-bucket reads are
-    row-identical; pruned probes never plan against a mixed layout)."""
-    from stock_trend_predictor_spark.operators.statestore import (
-        rebucket_append_table,
-    )
-
-    _check_sem_format(read_meta(state_dir))
-    new_p = int(new_p)
-    if new_p < 1:
-        raise ValueError(f"bucket count must be >= 1, got {new_p}")
-    return rebucket_append_table(
-        spark,
-        state_dir,
-        recompute={
-            "members": lambda df: df.withColumn(
-                "bucket", _cid_bucket(new_p)
-            ),
-            "labels": lambda df: df.withColumn(
-                "dbucket", _doc_bucket(new_p)
-            ),
-            "labels_byc": lambda df: df.withColumn(
-                "cbucket", _cluster_bucket(new_p)
-            ),
-        },
-        partition_by={
-            "members": ["bucket"],
-            "labels": ["dbucket"],
-            "labels_byc": ["cbucket"],
-        },
-        app_updates={"n_sem_buckets": new_p},
-    )
+    """Grow (or shrink) the fold's pinned bucket count
+    (statestore.rebucket_fold): every bucketed table rewrites under
+    the new P and ``n_sem_buckets`` re-pins in ONE atomic META swap
+    (post-re-bucket reads are row-identical; pruned probes never plan
+    against a mixed layout)."""
+    return rebucket_fold(spark, SEMDEDUP_LAYOUT, state_dir, new_p)
 
 
 def read_semdedup_keep(

@@ -136,6 +136,36 @@ def test_one_module_starts_foreach_batch_queries():
         assert found == ["streaming/ingest.py"], (needle, found)
 
 
+def test_folds_leave_the_fold_protocol_to_the_state_store():
+    """Each ``streaming/*_maintenance.py`` fold declares its layout once
+    and leaves the protocol to ``operators/statestore.py``: the replay
+    skip, the bucket hash, the compaction cadence and the format guard.
+    A source scan: a fold module that reads ``last_batch_id``, spells
+    out ``pmod(F.xxhash64``, tests ``% compact_every`` or defines a
+    ``_check_*format`` function of its own fails it."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "stock_trend_predictor_spark"
+    folds = sorted((pkg / "streaming").glob("*_maintenance.py"))
+    assert folds
+    found = []
+    for path in folds:
+        text = path.read_text()
+        found += [
+            (path.name, needle)
+            for needle in ("last_batch_id", "pmod(F.xxhash64", "% compact_every")
+            if needle in text
+        ]
+        found += [
+            (path.name, node.name)
+            for node in ast.walk(ast.parse(text))
+            if isinstance(node, ast.FunctionDef)
+            and re.fullmatch(r"_check_.*format", node.name)
+        ]
+    assert found == []
+
+
 def test_no_python_file_hard_codes_the_checkout_path():
     """Scripts and tests resolve the repository root from ``__file__``:
     a string literal that starts with the checkout's own absolute path

@@ -394,6 +394,32 @@ def test_route_by_source_split_is_partition(spark, tmp_path):
     assert all(r["source"] != "history" for r in rt_rows)
 
 
+def test_type_error_line_does_not_displace_its_tick(spark, tmp_path):
+    """A line that parses as JSON but has a field of the wrong type is
+    not a tick: it goes to the DLQ, and its symbol and timestamp do not
+    form a dedup key, so the valid tick with the same key that follows
+    it in the file still reaches the realtime sink."""
+    src = tmp_path / "in"
+    src.mkdir()
+    bad = '{"timestamp": "2024-01-01 09:30:00", "symbol": "AAPL", "close": "n/a"}'
+    tick = {"timestamp": "2024-01-01 09:30:00", "symbol": "AAPL",
+            "close": 11.0, "source": "realtime"}
+    _write_jsonl(src / "b0.jsonl", [], extra_raw=[bad, json.dumps(tick)])
+    hist, rt, dlq = (str(tmp_path / d) for d in ("hist", "rt", "dlq"))
+
+    q = route_by_source(
+        dedup_ticks(read_tick_file_stream(spark, str(src))),
+        hist, rt, checkpoint=str(tmp_path / "ckpt"), corrupt_path=dlq,
+    )
+    q.awaitTermination(120)
+
+    rt_rows = spark.read.parquet(rt).collect()
+    assert [(r["symbol"], str(r["ts"]), r["close"]) for r in rt_rows] == [
+        ("AAPL", "2024-01-01 09:30:00", 11.0)
+    ]
+    assert [r["_raw"] for r in spark.read.parquet(dlq).collect()] == [bad]
+
+
 def _parquet_parts(path):
     return [
         n for n in os.listdir(path) if n.startswith("part-") and n.endswith(".parquet")
